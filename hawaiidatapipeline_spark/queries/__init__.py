@@ -90,23 +90,23 @@ _MODULES = (
 # Current window (tool-rewritten): 50 keys — 0 failed-to-reprove, 0 never-checked,
 # then the 50 stalest greens (earliest last-checked round first).
 _FRONT: tuple[str, ...] = (
-    'soql_full_query_string', 'soql_chained_pipeline', 'soql_fulltext_paged',
-    'scan_orc_roundtrip', 'scan_text_lines', 'scan_csv_malformed',
-    'scan_schema_evolution', 'udf_cogrouped_map', 'udf_arrow_batch',
-    'tpch_q3_shipping_priority', 'tpch_q5_local_supplier_volume', 'tpch_q10_returned_items',
-    'tpch_q6_forecast_revenue', 'tpch_q14_promo_effect', 'tpch_q18_large_orders',
-    'fn_geo_within_box', 'fn_geo_box_then_circle', 'sample_bernoulli',
-    'sample_stratified', 'sample_weighted', 'agg_heavy_hitters_cms',
-    'mine_frequent_pairs', 'mine_association_rules', 'llm_inverted_index',
-    'llm_ngram_counts', 'emb_quantize_int8', 'emb_label_centroids',
-    'join_interval_binned', 'layout_zorder_key', 'scan_bucketed_join',
-    'sink_sorted_export', 'graph_pagerank_copurchase', 'llm_pii_scrub',
-    'llm_decontaminate', 'llm_repetition_filter', 'llm_pack_sequences',
-    'llm_mixture_sample', 'llm_text_normalize', 'llm_chunk_documents',
-    'llm_vocab_coverage', 'llm_dedup_minhash_exact', 'llm_simhash_exact',
-    'agg_collect_sorted', 'fn_bitwise', 'ts_interpolate_linear',
-    'events_user_lifecycle', 'multimodal_decode_tolerant', 'scan_xml_roundtrip',
-    'fn_variant_json', 'llm_dedup_url',
+    'etl_dedup_incremental', 'llm_containment_pairs', 'llm_length_histogram',
+    'llm_uniqueness_score', 'emb_norm_qc', 'join_fuzzy_blocked',
+    'llm_fingerprint_exact', 'llm_train_val_split', 'llm_dedup_clusters',
+    'llm_contamination_report', 'llm_dedup_fuzzy', 'llm_linkage_minhash',
+    'llm_dedup_survivors', 'llm_semantic_clusters', 'etl_scd2',
+    'etl_merge_upsert', 'events_anomaly', 'events_funnel',
+    'events_retention', 'etl_snapshot_diff', 'etl_incremental_agg',
+    'etl_rollup_hierarchy', 'llm_corpus_pipeline', 'llm_corpus_pipeline_v2',
+    'llm_corpus_pipeline_v3', 'llm_corpus_pipeline_v4', 'win_lag_lead',
+    'win_running_rows', 'win_range_frame', 'win_first_last',
+    'win_topk_per_group', 'win_islands', 'win_distribution',
+    'fulltext_ranked', 'dq_expectations', 'set_union_by_name',
+    'join_bloom_prefilter', 'join_salted_skew', 'agg_quantile_histogram',
+    'agg_distinct_kmv', 'agg_mode_deterministic', 'agg_corr_deterministic',
+    'agg_bitmap_distinct', 'events_transition_matrix', 'llm_unigram_logprob',
+    'catalog_search', 'multimodal_video_frames', 'multimodal_image_resize',
+    'soql_fulltext_terms', 'tpch_q4_late_orders',
 )
 
 

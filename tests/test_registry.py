@@ -278,7 +278,7 @@ def test_coverage_history_matches_correctness_files():
         pytest.skip("no driver correctness files yet (round 1)")
     assert os.path.exists(OUT), (
         "COVERAGE_HISTORY.md missing — run "
-        "python tools/coverage_history.py CORRECTNESS_r0*.json"
+        "python tools/coverage_history.py CORRECTNESS_r*.json"
     )
     if open(OUT).read() != render(paths):
         _skip_if_round_boundary(
@@ -286,7 +286,7 @@ def test_coverage_history_matches_correctness_files():
         )
     assert open(OUT).read() == render(paths), (
         "COVERAGE_HISTORY.md is stale — regenerate with "
-        "python tools/coverage_history.py CORRECTNESS_r0*.json"
+        "python tools/coverage_history.py CORRECTNESS_r*.json"
     )
 
 

@@ -23,13 +23,15 @@ Run the registry guard afterwards:
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 WINDOW = 50
-INIT_PATH = "/root/repo/hawaiidatapipeline_spark/queries/__init__.py"
+INIT_PATH = os.path.join(REPO, "hawaiidatapipeline_spark", "queries", "__init__.py")
 
 
 def row_is_green(row: dict) -> bool:
@@ -50,7 +52,7 @@ def main() -> int:
     failed: set[str] = set()
     last_green_round: dict[str, int] = {}
     for path in sys.argv[1:]:
-        m = re.search(r"r(\d+)", path)
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
         rnd = int(m.group(1)) if m else 0
         data = json.load(open(path))
         for name, row in data.items():
@@ -107,8 +109,6 @@ def main() -> int:
         f"{max(0, len(unchecked) - len([k for k in new_front if k in unchecked]))}"
     )
     print("new window:", new_front)
-    print("NOTE: update tests/test_registry.py ROUND1_GREEN to the union of "
-          "green keys, then run: python -m pytest tests/test_registry.py -q")
     return 0
 
 
