@@ -13,6 +13,15 @@ collect at the edges. Built for 100 TB / multi-executor scale, tested on
 local mode.
 """
 
+import os
+
+# Scratch and cache root (landing zones, staged copies, cache_stage
+# output): ``.cache`` beside the package, so every checkout keeps its
+# own files. Defined before the submodule imports below, which read it.
+CACHE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"
+)
+
 from hawaiidatapipeline_spark.session import get_spark, prepare_session
 from hawaiidatapipeline_spark.registry import load_table, register_all, TABLES
 

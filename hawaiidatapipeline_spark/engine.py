@@ -25,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hawaiidatapipeline_spark import CACHE_DIR
 from hawaiidatapipeline_spark.plans.pipeline import Pipeline
 from hawaiidatapipeline_spark.registry import DEFAULT_SF_DIR, TABLES, load_table
 from hawaiidatapipeline_spark.session import get_spark, prepare_session
@@ -117,7 +118,7 @@ class Engine:
         getattr(writer, fmt)(path)
         return path
 
-    def cache_stage(self, df: DataFrame, name: str, cache_dir: str = "/root/repo/.cache") -> DataFrame:
+    def cache_stage(self, df: DataFrame, name: str, cache_dir: str = CACHE_DIR) -> DataFrame:
         """Materialize an intermediate to parquet and reload it (lineage cut
         + cross-session reuse) — the engine-side 'local cache'."""
         path = os.path.join(cache_dir, "stages", name)

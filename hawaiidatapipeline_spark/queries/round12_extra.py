@@ -150,64 +150,39 @@ def _qc_featurize(d: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _qc_train(spark: SparkSession, d: DataFrame):
-    """Shared trainer: returns (dense, lab, n, weights, per-round scores).
-    Composition of :func:`_qc_featurize` and :func:`_qc_train_from` so the
-    streaming feature-store path trains with bit-identical arithmetic."""
+    """Shared trainer: returns (dense, lab, n, weights, per-round
+    (n_correct, n_docs)). Composition of :func:`_qc_featurize` and
+    :func:`_qc_train_from` so the streaming feature-store path trains
+    with bit-identical arithmetic."""
     docf, lab = _qc_featurize(d)
     return _qc_train_from(spark, docf, lab)
 
 
-def _qc_score_frame(darr: DataFrame, w_list) -> DataFrame:
-    """Map-only model scoring over the per-doc feature vectors: one
-    exact int64 dot per document against the closure-held weight
-    vector — no join, no shuffle (guide §4.2)."""
-    import numpy as np
-
-    from hawaiidatapipeline_spark.queries.emb_extra import _np_stack
-
-    spark = darr.sparkSession
-    bc = spark.sparkContext.broadcast(np.array(w_list, dtype=np.int64))
-
-    def part(it):
-        import pandas as pd
-
-        w = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = _np_stack(pdf["varr"])
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "s": V @ w}
-            )
-
-    return darr.select("doc_id", "varr").mapInPandas(
-        part, "doc_id bigint, s bigint"
-    )
-
-
 def _qc_train_from(spark: SparkSession, docf: DataFrame, lab: DataFrame):
     """Trainer over featurized inputs: returns (dense, lab, n, weights,
-    per-round scores). The docs x (B + 1) centered milli feature rows
-    live as ONE (doc_id, y, varr) vector frame, materialized once from
-    the sparse featurizer output with a single doc-keyed exchange; each
-    GD round is then ONE map-only ArrowEval job — per task an exact
-    int64 matmul scores the batch, the libm sigmoid residual is floored
-    to micro units per doc, and only the <= B + 1 per-task gradient
-    partials cross an exchange before the driver takes the floor-of-
-    double step (guide §4.2/§5; the old form paid a docs x B join +
-    doc-keyed aggregate + f-keyed aggregate shuffle per round). The
-    weight vector round-trips as a <= B + 1-row local relation — the
-    same rows F.broadcast(w) always pulled through the driver. ``dense``
-    and the per-round score frames are map-only projections of the
-    vector frame with bit-identical rows, so every consumer (scores
-    key, AUC, the v8 gate, the streaming curve) reads the exact values
-    the old join form produced. The sigmoid is the single
-    transcendental, evaluated with C libm ``math.exp`` per doc — the
-    same libm the DuckDB oracle calls (numpy's SIMD exp is deliberately
-    NOT used: it can differ by 1 ulp)."""
+    per-round (n_correct, n_docs)). The docs x (B + 1) centered milli
+    feature rows live as ONE (doc_id, y, varr) vector frame, materialized
+    once from the sparse featurizer output with a single doc-keyed
+    exchange; each GD round is then ONE map-only mapInPandas job — per
+    task an exact int64 matmul scores the batch with the round-(r-1)
+    weights, the libm sigmoid residual is floored to micro units per doc,
+    and the task emits only its B + 1 gradient partials plus its
+    (n_correct, n_docs) at threshold logit >= 0. The driver collects
+    those per-task partials (tasks x (B + 3) values, never corpus-sized),
+    sums them as Python ints and takes the floor-of-double step — no
+    reduce exchange, and round r's training accuracy rides round r's
+    gradient job instead of a separate scoring pass. The final weight
+    vector is a <= B + 1-row typed local relation (LocalTableScan, no
+    Python worker to scan it). ``dense`` is a map-only projection of the
+    vector frame with bit-identical rows, so every consumer (scores key,
+    AUC, influence, the v8 gate) reads the exact values the old join form
+    produced. The sigmoid is the single transcendental, evaluated with C
+    libm ``math.exp`` per doc — the same libm the DuckDB oracle calls
+    (numpy's SIMD exp is deliberately NOT used: it can differ by 1 ulp)."""
     import math
 
     import numpy as np
+    import pandas as pd
 
     docf = materialize(docf)
     lab = materialize(lab)
@@ -228,8 +203,6 @@ def _qc_train_from(spark: SparkSession, docf: DataFrame, lab: DataFrame):
     pos_bc = spark.sparkContext.broadcast((dict(f_pos), base_vec))
 
     def build(it):
-        import pandas as pd
-
         f_pos_l, base = pos_bc.value
         for pdf in it:
             if not len(pdf):
@@ -259,7 +232,7 @@ def _qc_train_from(spark: SparkSession, docf: DataFrame, lab: DataFrame):
     )
     # returned dense: the exploded (doc_id, f, v) projection of the
     # vector frame — map-only per consumer, bit-identical rows
-    feats_lit = F.array(*[F.lit(int(f)).cast("long") for f in feats])
+    feats_lit = F.lit(np.array(feats, dtype=np.int64))
     dense = (
         darr.select("doc_id", F.posexplode("varr").alias("_i", "v"))
         .select(
@@ -270,24 +243,20 @@ def _qc_train_from(spark: SparkSession, docf: DataFrame, lab: DataFrame):
     )
     w_np = np.zeros(len(feats), dtype=np.int64)
     den = float(n * _QC_LR_DEN)
-    scores = []
+    acc = []
     for _ in range(_QC_ROUNDS):
-        scores.append(_qc_score_frame(darr, list(w_np)))
         w_bc = spark.sparkContext.broadcast(w_np.copy())
 
         def grad_part(it):
-            import pandas as pd
+            from hawaiidatapipeline_spark.queries.emb_extra import _np_stack
 
             w = w_bc.value
-            acc = None
+            g_sum, n_correct, n_docs = None, 0, 0
             for pdf in it:
                 if not len(pdf):
                     continue
-                from hawaiidatapipeline_spark.queries.emb_extra import (
-                    _np_stack,
-                )
-
                 V = _np_stack(pdf["varr"])
+                y = pdf["y"].values
                 s = V @ w
                 # per-doc libm sigmoid, floored to micro units — the
                 # expression F.floor(1e6 / (1 + exp(-(s/1e9)))) verbatim
@@ -301,31 +270,34 @@ def _qc_train_from(spark: SparkSession, docf: DataFrame, lab: DataFrame):
                     dtype=np.int64,
                     count=len(s),
                 )
-                resid = pdf["y"].values * 1000000 - sig
-                g = resid @ V
-                acc = g if acc is None else acc + g
-            if acc is not None:
+                g = (y * 1000000 - sig) @ V
+                g_sum = g if g_sum is None else g_sum + g
+                n_correct += int(((s >= 0) == (y == 1)).sum())
+                n_docs += len(s)
+            if g_sum is not None:
                 yield pd.DataFrame(
-                    {"i": np.arange(len(acc), dtype=np.int64), "g": acc}
+                    {"g": [g_sum], "n_correct": [n_correct], "n_docs": [n_docs]}
                 )
 
-        grad_rows = (
+        parts = (
             darr.select("y", "varr")
-            .mapInPandas(grad_part, "i bigint, g bigint")
-            .groupBy("i")
-            .agg(F.sum("g").cast("long").alias("g"))
+            .mapInPandas(
+                grad_part, "g array<bigint>, n_correct bigint, n_docs bigint"
+            )
             .collect()
         )
-        grads = {int(r["i"]): int(r["g"]) for r in grad_rows}
+        grads = [sum(int(p["g"][i]) for p in parts) for i in range(len(feats))]
+        acc.append(
+            (sum(p["n_correct"] for p in parts), sum(p["n_docs"] for p in parts))
+        )
         w_np = w_np + np.array(
-            [math.floor(grads.get(i, 0) / den) for i in range(len(feats))],
-            dtype=np.int64,
+            [math.floor(g / den) for g in grads], dtype=np.int64
         )
     w = spark.createDataFrame(
-        [(int(f), int(w_np[i])) for i, f in enumerate(feats)],
+        pd.DataFrame({"f": np.array(feats, dtype=np.int64), "w": w_np}),
         "f bigint, w bigint",
     )
-    return dense, lab, n, w, scores
+    return dense, lab, n, w, acc
 
 
 @q(
@@ -356,47 +328,43 @@ def llm_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the eval needs NO transcendental); the round-r score uses the
     round-(r-1) weights, so round 1 is the all-zero model (base rate)
     and the curve shows what each sweep buys — 0.50 -> 0.74 -> 0.86 on
-    the fixture. Per round: one broadcast of the <= B+1-row weight
-    vector against the docs x B dense frame, one doc-keyed logit agg,
-    one f-keyed gradient agg — two linear passes, the distributed
-    batch-GD shape at any corpus size. The sigmoid is the single
-    transcendental, floored to micro units immediately (both engines
-    share libm — the DSIR lam_micro precedent), so the oracle unrolls
-    the rounds as CTEs and hash-matches every weight and count."""
+    the fixture. Per round: ONE map-only pass over the docs x (B + 1)
+    vector frame against the broadcast <= B+1 weight vector, emitting
+    per task the B + 1 gradient partials and the round's (n_correct,
+    n_docs) — the distributed batch-GD shape at any corpus size, with
+    only tasks x (B + 3) values reaching the driver. The sigmoid is the
+    single transcendental, floored to micro units immediately (both
+    engines share libm — the DSIR lam_micro precedent), so the oracle
+    unrolls the rounds as CTEs and hash-matches every weight and count."""
     d = load_table(spark, sf_dir, "documents")
-    _, lab, _, _, scores = _qc_train(spark, d)
-    return _qc_curve(lab, scores)
+    _, _, _, _, acc = _qc_train(spark, d)
+    return _qc_curve(spark, acc)
 
 
-def _qc_curve(lab: DataFrame, scores: list[DataFrame]) -> DataFrame:
+def _qc_curve(spark: SparkSession, acc: list[tuple[int, int]]) -> DataFrame:
     """Per-round training-set accuracy frame (round, n_correct, n_docs,
-    accuracy_micro) — shared by the batch key and the streaming
-    feature-store twin (streaming/runtime.classifier_training_curve)."""
-    out = None
-    for r, s in enumerate(scores, start=1):
-        leg = (
-            s.join(lab, "doc_id")
-            .agg(
-                F.sum(
-                    F.when((F.col("s") >= 0) == (F.col("y") == 1), 1).otherwise(
-                        0
-                    )
-                )
-                .cast("long")
-                .alias("n_correct"),
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-            )
-            .select(
-                F.lit(r).alias("round"),
-                "n_correct",
-                "n_docs",
-                F.floor(F.col("n_correct") * 1000000.0 / F.col("n_docs"))
-                .cast("long")
-                .alias("accuracy_micro"),
-            )
-        )
-        out = leg if out is None else out.unionByName(leg)
-    return out.orderBy("round")
+    accuracy_micro) from the trainer's per-round (n_correct, n_docs) —
+    a typed local relation, shared by the batch key and the streaming
+    feature-store twin (streaming/runtime.classifier_training_curve).
+    accuracy_micro is floor(n_correct * 1e6 / n_docs) in IEEE double,
+    the oracle's arithmetic."""
+    import math
+
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "round": range(1, len(acc) + 1),
+                "n_correct": [c for c, _ in acc],
+                "n_docs": [m for _, m in acc],
+                "accuracy_micro": [
+                    math.floor(c * 1000000.0 / m) for c, m in acc
+                ],
+            }
+        ),
+        "round int, n_correct bigint, n_docs bigint, accuracy_micro bigint",
+    )
 
 
 @q(

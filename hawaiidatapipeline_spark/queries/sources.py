@@ -18,12 +18,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hawaiidatapipeline_spark import CACHE_DIR
 from hawaiidatapipeline_spark.queries._registry import new_module_registry
 from hawaiidatapipeline_spark.registry import TABLES, load_table
 
 QUERIES, ORACLES, q = new_module_registry()
 
-_SCRATCH = "/root/repo/.cache"
+_SCRATCH = CACHE_DIR
 
 
 def _scratch(name: str) -> str:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Confs that are safe to set on a live session (runtime-settable).
@@ -35,13 +36,21 @@ _RUNTIME_CONFS = {
 }
 
 
+# Error conditions Spark raises for a conf that cannot change on a live
+# session; any other failure (a rejected value, a dead session) is a fault.
+_UNSETTABLE = {"CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"}
+
+
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Normalize a (possibly externally-created) session's runtime confs."""
+    """Normalize a (possibly externally-created) session's runtime confs.
+    A conf this build will not change at runtime is skipped; every other
+    error propagates."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable at runtime in this build — keep going
+        except AnalysisException as e:
+            if e.getCondition() not in _UNSETTABLE:
+                raise
     return spark
 
 

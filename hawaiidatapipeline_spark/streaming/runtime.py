@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from hawaiidatapipeline_spark import CACHE_DIR
 from hawaiidatapipeline_spark.registry import load_table, normalize_event_time
 from hawaiidatapipeline_spark.session import prepare_session
 
@@ -58,7 +59,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     prepare_session(spark)
     src = os.path.join(sf_dir, "events.parquet")
-    landing = os.path.join("/root/repo/.cache", "landing_events_" + sf_dir.strip("/").replace("/", "_"))
+    landing = os.path.join(CACHE_DIR, "landing_events_" + sf_dir.strip("/").replace("/", "_"))
     staged = os.path.join(landing, "events.parquet")
     # Unconditional re-stage (ADVICE r3 item 3): size/mtime comparison let a
     # regenerated same-size fixture with an equal-or-older mtime (e.g.
@@ -1175,7 +1176,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare_session(spark)
     src = os.path.join(sf_dir, "documents.parquet")
     landing = os.path.join(
-        "/root/repo/.cache",
+        CACHE_DIR,
         "landing_docs_" + sf_dir.strip("/").replace("/", "_"),
     )
     import shutil
@@ -1265,7 +1266,7 @@ def stream_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare_session(spark)
     src = os.path.join(sf_dir, "orders.parquet")
     landing = os.path.join(
-        "/root/repo/.cache",
+        CACHE_DIR,
         "landing_orders_" + sf_dir.strip("/").replace("/", "_"),
     )
     import shutil
@@ -1475,8 +1476,9 @@ def classifier_training_curve(store: DataFrame) -> DataFrame:
     lab = store.filter(F.col("f") == -2).select(
         "doc_id", "source", F.col("c").cast("int").alias("y")
     )
-    _, lab, _, _, scores = _qc_train_from(store.sparkSession, docf, lab)
-    return _qc_curve(lab, scores)
+    spark = store.sparkSession
+    _, _, _, _, acc = _qc_train_from(spark, docf, lab)
+    return _qc_curve(spark, acc)
 
 
 def dsir_model_lambda(model: DataFrame) -> DataFrame:

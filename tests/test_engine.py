@@ -67,3 +67,23 @@ def test_cache_stage_cuts_lineage(eng, tmp_path):
     cached = eng.cache_stage(df, "big_orders", cache_dir=str(tmp_path))
     assert cached.count() == df.count()
     assert "Scan parquet" in audit.explain_str(cached)
+
+
+def test_prepare_session_skips_only_unsettable_confs(spark, monkeypatch):
+    """A conf the live session cannot change is skipped; a rejected value
+    is a fault and must surface, not be swallowed."""
+    from pyspark.errors import IllegalArgumentException
+
+    from hawaiidatapipeline_spark import session
+
+    monkeypatch.setattr(
+        session,
+        "_RUNTIME_CONFS",
+        {"spark.sql.warehouse.dir": "/nonexistent", "spark.executor.memory": "1g"},
+    )
+    session.prepare_session(spark)  # static + core confs: skipped
+    monkeypatch.setattr(
+        session, "_RUNTIME_CONFS", {"spark.sql.shuffle.partitions": "many"}
+    )
+    with pytest.raises(IllegalArgumentException):
+        session.prepare_session(spark)

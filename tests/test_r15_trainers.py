@@ -77,23 +77,100 @@ def test_pq_driver_collect_is_codebook_sized(spark):
             assert sorted(cids) == list(cids)
 
 
-def test_qc_weight_vector_is_local_relation(spark):
-    from hawaiidatapipeline_spark.queries.round12_extra import (
-        _DSIR_B,
-        _qc_train,
-    )
+@pytest.fixture(scope="module")
+def qc_runs(spark):
+    """The quality-classifier trainer run with 0.._QC_ROUNDS GD rounds:
+    {rounds: (jobs, dense, lab, w, acc)}, where ``jobs`` counts the Spark
+    jobs of that run (status tracker, one job group per run) and ``w``
+    is the weight vector after that many rounds."""
+    from hawaiidatapipeline_spark.queries import round12_extra as r12
     from hawaiidatapipeline_spark.registry import load_table
 
+    sc = spark.sparkContext
     d = load_table(spark, SF0001, "documents")
-    dense, lab, n, w, scores = _qc_train(spark, d)
-    # the weight vector is <= B + 1 rows at any corpus size and is now a
-    # driver-created relation (PySpark parallelizes local rows as an
-    # ExistingRDD): it is never COMPUTED by a distributed plan, so no
-    # per-round weight materialize/broadcast-build job exists
+    runs = {}
+    try:
+        for rounds in range(r12._QC_ROUNDS + 1):
+            group = f"qc_rounds_{rounds}"
+            sc.setJobGroup(group, group)
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(r12, "_QC_ROUNDS", rounds)
+                dense, lab, _, w, acc = r12._qc_train(spark, d)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            runs[rounds] = (jobs, dense, lab, w, acc)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return runs
+
+
+def _assert_local_relation(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    for node in ("Scan ExistingRDD", "MapInPandas", "ArrowEvalPython", "Exchange"):
+        assert node not in plan, plan
+
+
+def test_qc_weight_vector_is_local_relation(qc_runs):
+    from hawaiidatapipeline_spark.queries.round12_extra import (
+        _DSIR_B,
+        _QC_ROUNDS,
+    )
+
+    _, _, _, w, _ = qc_runs[_QC_ROUNDS]
+    # the weight vector is <= B + 1 rows at any corpus size and is a
+    # typed driver-built relation: scanning it starts no Python worker
+    # and it is never COMPUTED by a distributed plan
     assert w.count() <= _DSIR_B + 1
-    plan = w._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
-    assert "Exchange" not in plan and "Join" not in plan
+    _assert_local_relation(w)
+
+
+def test_qc_curve_is_local_relation(spark, qc_runs):
+    from hawaiidatapipeline_spark.queries.round12_extra import (
+        _QC_ROUNDS,
+        _qc_curve,
+    )
+
+    curve = _qc_curve(spark, qc_runs[_QC_ROUNDS][4])
+    assert curve.count() == _QC_ROUNDS
+    _assert_local_relation(curve)
+
+
+def test_qc_gd_loop_runs_one_job_per_round(qc_runs):
+    """Each GD round is exactly ONE Spark job (the fused gradient +
+    accuracy pass, collected per task): the runs differ only in their
+    round count, so their job counts differ by exactly that."""
+    jobs = [qc_runs[r][0] for r in sorted(qc_runs)]
+    assert [b - a for a, b in zip(jobs, jobs[1:])] == [1] * (len(jobs) - 1)
+
+
+def test_qc_fused_accuracy_matches_relational_form(qc_runs):
+    """Round r's (n_correct, n_docs), computed inside round r's gradient
+    job, must equal the relational form it replaced: score every doc
+    with the round-(r-1) weights (dense joined to w, doc-keyed sum),
+    join the labels, aggregate."""
+    from hawaiidatapipeline_spark.queries.round12_extra import _QC_ROUNDS
+
+    _, _, _, _, acc = qc_runs[_QC_ROUNDS]
+    assert len(acc) == _QC_ROUNDS
+    for r in range(1, _QC_ROUNDS + 1):
+        _, dense, lab, w_prev, _ = qc_runs[r - 1]
+        scores = (
+            dense.join(F.broadcast(w_prev), "f")
+            .groupBy("doc_id")
+            .agg(F.sum(F.col("v") * F.col("w")).cast("long").alias("s"))
+        )
+        old = (
+            scores.join(lab, "doc_id")
+            .agg(
+                F.sum(
+                    F.when((F.col("s") >= 0) == (F.col("y") == 1), 1).otherwise(0)
+                ).alias("n_correct"),
+                F.count(F.lit(1)).alias("n_docs"),
+            )
+            .collect()[0]
+        )
+        assert acc[r - 1] == (old["n_correct"], old["n_docs"])
 
 
 def test_kmeans_assign_matches_old_join_form(spark):

@@ -90,20 +90,27 @@ def registry():
     return qs, oracles
 
 
-def test_no_complex_output_columns(spark, registry):
+@pytest.fixture(scope="module")
+def schemas(spark, registry):
+    """{key: output schema} of every registered query at sf0.001, built
+    once for the schema lints below (each build runs the query function,
+    eager trainer jobs included)."""
+    qs, _ = registry
+    return {name: fn(spark, SF0001).schema for name, fn in qs.items()}
+
+
+def test_no_complex_output_columns(schemas):
     """Schema analysis only (no jobs): no query may emit array/map/struct/
     binary columns — the driver's hash canonicalizer crashes on them."""
-    qs, _ = registry
     offenders = []
-    for name, fn in qs.items():
-        schema = fn(spark, SF0001).schema
+    for name, schema in schemas.items():
         for field in schema.fields:
             if isinstance(field.dataType, COMPLEX):
                 offenders.append(f"{name}.{field.name}: {field.dataType}")
     assert not offenders, f"complex output columns crash the driver gate: {offenders}"
 
 
-def test_no_pandas_degrading_output_types(spark, registry):
+def test_no_pandas_degrading_output_types(schemas, registry):
     """Round-2 lesson (fn_money_decimal, llm_lang_source_matrix): the driver
     fetches both sides through pandas, where DuckDB DECIMAL and HUGEINT
     degrade to float64 while Spark returns Decimal/long — same values,
@@ -114,10 +121,9 @@ def test_no_pandas_degrading_output_types(spark, registry):
     so this stays schema-analysis-only like the complex-type lint."""
     import duckdb
 
-    qs, oracles = registry
+    _, oracles = registry
     offenders = []
-    for name, fn in qs.items():
-        schema = fn(spark, SF0001).schema
+    for name, schema in schemas.items():
         for field in schema.fields:
             if isinstance(field.dataType, T.DecimalType):
                 offenders.append(f"{name}.{field.name}: spark {field.dataType}")

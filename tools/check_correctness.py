@@ -29,13 +29,15 @@ The close ritual (tools/close_round.py) still runs the FULL sweep.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def canon(v, date_bridge=False):
@@ -142,14 +144,13 @@ def table_fingerprint(cols, rows, bridge=frozenset()):
 def changed_since_keys(ref: str, qs) -> set[str]:
     """Keys to re-check after working at <ref>: every key whose defining
     module file changed since, plus the pinned driver window."""
-    import os
     import subprocess
 
     out = subprocess.run(
         ["git", "diff", "--name-only", ref, "--", "hawaiidatapipeline_spark"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         check=True,
     ).stdout
     changed_files = {ln.strip() for ln in out.splitlines() if ln.strip()}
@@ -157,7 +158,7 @@ def changed_since_keys(ref: str, qs) -> set[str]:
     for name, fn in qs.items():
         mod = sys.modules.get(getattr(fn, "__module__", ""))
         path = getattr(mod, "__file__", None)
-        if path and os.path.relpath(path, "/root/repo") in changed_files:
+        if path and os.path.relpath(path, REPO) in changed_files:
             keys.add(name)
     from hawaiidatapipeline_spark import queries as qmod
 

@@ -79,7 +79,7 @@ PROBES = [
     ("stream_static_enrich", "stream-static enrich: broadcast dim join, stream side unshuffled for the join"),
     # round-11 additions
     ("llm_dsir_weights", "DSIR: lambda model broadcast (B=256 rows) — corpus shuffle = hashed-feature partials + doc-keyed agg only"),
-    ("llm_quality_classifier_train", "logistic GD: weight vector broadcast per round; shuffle = docs x B partials, model never shuffles"),
+    ("llm_quality_classifier_train", "logistic GD: one map-only job per round (gradient + accuracy partials collected per task); no per-round shuffle"),
     ("emb_kmeans_scalable_init", "k-means||: candidate-vector broadcasts per round; shuffle = per-vector distance partials only"),
     ("llm_doremi_mixture", "DoReMi: one linear token pass; rounds are domain x vocab grain — shuffle stays constant-size"),
     ("llm_sequence_packing", "packing: narrow token map + range-partitioned prefix sums; no single-partition window"),

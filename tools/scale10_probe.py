@@ -49,7 +49,7 @@ PROBES = [
     ("agg_ddsketch_quantiles", "map-side log buckets — state row-count independent"),
     ("llm_corpus_pipeline_v7", "v6 funnel + DSIR selection — lambda broadcast + top-N"),
     ("graph_ppr_seeded", "seeded PPR — frontier-sized rounds, seeds scale with parts"),
-    ("llm_quality_classifier_train", "logistic GD — docs x B dense frame per round, B+1-row broadcasts"),
+    ("llm_quality_classifier_train", "logistic GD — one map-only pass per round, B+1-row weight broadcast, per-task partials"),
     ("llm_corpus_pipeline_v8", "v7 funnel + classifier gate broadcast + per-shard packing windows"),
     ("emb_kmeans_scalable_init", "k-means|| — R candidate broadcasts + folds; candidate-grain recluster"),
     ("llm_decontaminate_semantic", "probe-strided integer cosine sweep — probes ~65 at any N"),

@@ -79,7 +79,7 @@ PROBES = [
     ("llm_semdedup_recall", "bucketed candidate edges vs sampled truth slice — linear in buckets + sample²"),
     ("llm_corpus_pipeline_v6", "staged funnel; semantic drop-list is a broadcast anti-join over doc ids"),
     ("llm_dsir_weights", "DSIR — linear feature explode + B-row broadcast λ join + doc-keyed agg"),
-    ("llm_quality_classifier_train", "logistic GD — per round: B-row broadcast + 2 linear aggs over docs x B dense frame"),
+    ("llm_quality_classifier_train", "logistic GD — per round: one map-only pass over the docs x (B+1) vector frame, tasks x (B+3) partials to the driver"),
     ("llm_dsir_sample", "DSIR Gumbel-top-k — weights plan + map-side key + TakeOrdered top-N"),
     ("emb_ivfpq_rerank", "ADC shortlist + exact refine — probes x shortlist vector fetch, never corpus"),
     ("fulltext_bm25", "BM25 — token explode + 3-term posting join + doc agg, top-50"),
