@@ -148,7 +148,7 @@ _KM_ROUNDS = 3
 def _km_k_subquery() -> str:
     """Scalar-subquery form of the corpus-scaled coarse K for oracle CTEs
     — must stay bit-identical to the Spark-side computation in
-    ``_kmeans_assign`` (greatest/ceil over the same count)."""
+    ``_km_fit`` (greatest/ceil over the same count)."""
     return (
         f"(SELECT greatest({_KM_K}, ceil(count(*) / {_KM_TARGET}.0))::BIGINT"
         " FROM embeddings)"
@@ -288,17 +288,19 @@ def _quant_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# Vectorized-native Lloyd training (guide §4.2): Spark distributes the
-# corpus and runs ONE map-only ArrowEval pass per round; the per-task
-# distance/argmin work runs in exact numpy int64 (whole batches at a
-# time — no per-element interpreted HOF lambdas, the r14 lesson), and
-# only the (cid, d)-grain partial sums cross an exchange. The K·d
-# centroid rows round-trip through the driver each round — EXACTLY the
-# rows F.broadcast(centroids) already pulled through the driver in the
-# join form, so the driver footprint is unchanged (the MLlib-kmeans
-# centroid round-trip).
+# Vectorized-native Lloyd training (guide §4.2) — ONE trainer for both
+# quantizers: k-means is product quantization with a single subspace as
+# wide as the vector. Codebooks are a driver list over subspaces m of
+# (cids, C), C the (k, width) centroid rows sorted by cid. Spark
+# distributes the corpus and runs ONE map-only mapInPandas pass per
+# round; the per-task distance/argmin work runs in exact numpy int64
+# over whole batches (no per-element interpreted HOF lambdas), and only
+# the (m, cid, d)-grain partial sums cross an exchange. The driver holds
+# only the M·k·width codebook per round, never corpus-sized — the
+# MLlib-kmeans centroid round-trip.
 
 _KM_CID_BLOCK = 256  # centroid block size for the chunked argmin
+_EMB_DIMS = 64  # fixed embedding width (FIXTURES.md): k-means' one subspace
 
 
 def _np_stack(col):
@@ -337,151 +339,202 @@ def _nearest_block(Q, C):
     return best_i, best_d
 
 
-def _floor_mean_rows(agg_rows):
-    """floor(sum * 1.0 / count) per (cid, d) from collected partial-sum
-    rows — the same IEEE double division the SQL/DuckDB update performs
-    (int64→double conversion then one correctly-rounded divide), so the
-    centroid values are bit-identical. Returns [(cid, [cq..])] sorted by
-    cid."""
-    import math
-
-    by_cid: dict = {}
-    for r in agg_rows:
-        by_cid.setdefault(r["cid"], {})[r["d"]] = math.floor(r["s"] / r["n"])
+def _lloyd_init(qarr: DataFrame, k: int, width: int):
+    """Initial codebooks from the first ``k`` vectors (vec_id < k), each
+    split into ``width``-wide subspaces — the c0 / pc0 CTEs as driver
+    lists."""
+    rows = sorted(
+        (int(r["vec_id"]), [int(x) for x in r["qarr"]])
+        for r in qarr.filter(F.col("vec_id") < k).collect()
+    )
+    cids = [cid for cid, _ in rows]
     return [
-        (cid, [ds[d] for d in sorted(ds)]) for cid, ds in sorted(by_cid.items())
+        (cids, [arr[m * width : (m + 1) * width] for _, arr in rows])
+        for m in range(len(rows[0][1]) // width)
     ]
 
 
-def _km_update_np(qarr: DataFrame, cids, C):
-    """ONE Lloyd round as ONE Spark job: map-only numpy assignment over
-    the broadcast centroid matrix, K×d per-task partial sums, one tiny
-    (cid, d) aggregate collected and floor-averaged on the driver.
-    Returns (cids, C) for the next round (dead cells drop out, exactly
-    like the join+groupBy update)."""
+def _broadcast_cents(spark: SparkSession, cents):
+    """Codebooks as broadcast numpy int64 (cid array, C) pairs."""
     import numpy as np
 
-    spark = qarr.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (list(cids), np.array(C, dtype=np.int64))
+    return spark.sparkContext.broadcast(
+        [
+            (np.array(cids, dtype=np.int64), np.array(C, dtype=np.int64))
+            for cids, C in cents
+        ]
     )
+
+
+def _lloyd_update(qarr: DataFrame, cents):
+    """ONE Lloyd round over all M subspaces as ONE collect: per task,
+    the exact numpy argmin per subspace and (m, cid)-grain partial sums;
+    one tiny (m, cid, d) aggregate collected and averaged on the driver
+    as floor(sum * 1.0 / count) — the same IEEE double division the
+    SQL/DuckDB update performs, so centroid values are bit-identical.
+    Cells no vector picked drop out, exactly like the join+groupBy
+    update. Returns the next codebooks."""
+    import math
+
+    bc = _broadcast_cents(qarr.sparkSession, cents)
 
     def part(it):
         import numpy as np
         import pandas as pd
 
-        cid_l, Cn = bc.value
-        d = Cn.shape[1]
+        cents_l = bc.value
         sums: dict = {}
         for pdf in it:
             if not len(pdf):
                 continue
             Q = _np_stack(pdf["qarr"])
-            bi, _ = _nearest_block(Q, Cn)
-            for i in np.unique(bi):
-                sel = Q[bi == i]
-                s, n = sums.get(i, (np.zeros(d, dtype=np.int64), 0))
-                sums[i] = (s + sel.sum(axis=0, dtype=np.int64), n + len(sel))
-        out_cid, out_d, out_s, out_n = [], [], [], []
-        for i, (s, n) in sums.items():
-            cid = cid_l[i]
-            for dd in range(d):
-                out_cid.append(cid)
-                out_d.append(dd)
-                out_s.append(int(s[dd]))
-                out_n.append(n)
-        if out_cid:
-            yield pd.DataFrame(
-                {"cid": out_cid, "d": out_d, "s": out_s, "n": out_n}
-            )
+            for m, (cid_arr, Cn) in enumerate(cents_l):
+                D = Cn.shape[1]
+                Qm = Q[:, m * D : (m + 1) * D]
+                bi, _ = _nearest_block(Qm, Cn)
+                for i in np.unique(bi):
+                    sel = Qm[bi == i]
+                    key = (m, int(cid_arr[i]))
+                    s, n = sums.get(key, (np.zeros(D, dtype=np.int64), 0))
+                    sums[key] = (
+                        s + sel.sum(axis=0, dtype=np.int64),
+                        n + len(sel),
+                    )
+        out = {"m": [], "cid": [], "d": [], "s": [], "n": []}
+        for (m, cid), (s, n) in sums.items():
+            D = len(s)
+            for j in range(D):
+                out["m"].append(m)
+                out["cid"].append(cid)
+                out["d"].append(m * D + j)
+                out["s"].append(int(s[j]))
+                out["n"].append(n)
+        if out["m"]:
+            yield pd.DataFrame(out)
 
     agg = (
         qarr.select("qarr")
-        .mapInPandas(part, "cid bigint, d bigint, s bigint, n bigint")
-        .groupBy("cid", "d")
+        .mapInPandas(
+            part, "m bigint, cid bigint, d bigint, s bigint, n bigint"
+        )
+        .groupBy("m", "cid", "d")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .collect()
     )
-    rows = _floor_mean_rows(agg)
-    return [cid for cid, _ in rows], [arr for _, arr in rows]
+    by_m: dict = {}
+    for r in agg:
+        by_m.setdefault(r["m"], {}).setdefault(r["cid"], {})[
+            r["d"]
+        ] = math.floor(r["s"] / r["n"])
+    nxt = []
+    for m in range(len(cents)):
+        per = by_m.get(m, {})
+        cids = sorted(per)
+        nxt.append((cids, [[per[c][d] for d in sorted(per[c])] for c in cids]))
+    return nxt
 
 
-def _km_train_np(qarr: DataFrame, k: int):
-    """Fixed-point Lloyd rounds in vectorized-native form: R one-job
-    rounds. Returns ((cids_prev, C_prev), (cids_fin, C_fin)) =
-    (c_{R-1}, c_R) as driver lists: the caller's assignment pairs with
-    c_{R-1}, exactly like the unrolled oracle (a{R} is argmin vs
-    c{R-1})."""
-    init = sorted(
-        (int(r["vec_id"]), [int(x) for x in r["qarr"]])
-        for r in qarr.filter(F.col("vec_id") < k).collect()
-    )
-    cids = [cid for cid, _ in init]
-    C = [arr for _, arr in init]
-    prev = (cids, C)
-    for _ in range(_KM_ROUNDS):
-        prev = (cids, C)
-        cids, C = _km_update_np(qarr, cids, C)
-    return prev, (cids, C)
+def _lloyd_train(qarr: DataFrame, k: int, width: int, rounds: int):
+    """Fixed-point Lloyd training: ``rounds`` one-pass rounds from
+    :func:`_lloyd_init`. Returns (prev, fin) = (c_{R-1}, c_R): the
+    caller's assignment pairs with c_{R-1}, exactly like the unrolled
+    oracle (a{R} / pa{R} is the argmin vs c{R-1} / pc{R-1})."""
+    cents = _lloyd_init(qarr, k, width)
+    prev = cents
+    for _ in range(rounds):
+        prev = cents
+        cents = _lloyd_update(qarr, cents)
+    return prev, cents
 
 
-def _km_assign_np(qarr: DataFrame, cids, C) -> DataFrame:
-    """Map-only final Lloyd assignment: (vec_id, cid) via the exact
-    numpy (dist, cid) argmin against the broadcast centroid matrix — no
-    shuffle at all (the old path paid a d-keyed join, a (vec, cid)
-    aggregate and a window)."""
-    import numpy as np
-
-    spark = qarr.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (list(cids), np.array(C, dtype=np.int64))
-    )
+def _lloyd_assign(qarr: DataFrame, cents) -> DataFrame:
+    """Map-only final assignment: (vec_id, m, cid, dist) — one row per
+    vector and subspace, exact numpy int64 subspace distances in the
+    (dist, cid) total order, no shuffle at all."""
+    bc = _broadcast_cents(qarr.sparkSession, cents)
 
     def part(it):
         import numpy as np
         import pandas as pd
 
-        cid_l, Cn = bc.value
-        cid_arr = np.array(cid_l, dtype=np.int64)
+        cents_l = bc.value
         for pdf in it:
             if not len(pdf):
                 continue
             Q = _np_stack(pdf["qarr"])
-            bi, _ = _nearest_block(Q, Cn)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].values, "cid": cid_arr[bi]}
-            )
+            vec = pdf["vec_id"].values
+            frames = []
+            for m, (cid_arr, Cn) in enumerate(cents_l):
+                D = Cn.shape[1]
+                bi, bd = _nearest_block(Q[:, m * D : (m + 1) * D], Cn)
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "vec_id": vec,
+                            "m": np.full(len(vec), m, dtype=np.int64),
+                            "cid": cid_arr[bi],
+                            "dist": bd,
+                        }
+                    )
+                )
+            yield pd.concat(frames, ignore_index=True)
 
     return qarr.select("vec_id", "qarr").mapInPandas(
-        part, "vec_id bigint, cid bigint"
+        part, "vec_id bigint, m bigint, cid bigint, dist bigint"
     )
 
 
-def _cent_frame(spark: SparkSession, cids, C) -> DataFrame:
-    """Centroids as a driver-local relation (LocalTableScan) in the
-    exploded (cid, d, cq) shape consumers broadcast-join against."""
-    rows = [
-        (int(cid), d, int(cq))
-        for cid, arr in zip(cids, C)
-        for d, cq in enumerate(arr)
-    ]
-    return spark.createDataFrame(rows, "cid bigint, d bigint, cq bigint")
+def _cent_frame(spark: SparkSession, cents) -> DataFrame:
+    """Codebooks as a typed driver-local relation (LocalTableScan — no
+    Python worker to scan it) in the exploded (m, cid, d, cq) shape
+    consumers broadcast-join against; d is global (m·width + j)."""
+    import numpy as np
+    import pandas as pd
+
+    parts = []
+    for m, (cids, C) in enumerate(cents):
+        C = np.array(C, dtype=np.int64)
+        k, D = C.shape
+        parts.append(
+            pd.DataFrame(
+                {
+                    "m": np.full(k * D, m, dtype=np.int64),
+                    "cid": np.repeat(np.array(cids, dtype=np.int64), D),
+                    "d": np.tile(np.arange(D, dtype=np.int64), k) + m * D,
+                    "cq": C.ravel(),
+                }
+            )
+        )
+    return spark.createDataFrame(
+        pd.concat(parts, ignore_index=True),
+        "m bigint, cid bigint, d bigint, cq bigint",
+    )
 
 
-def _km_ctx(spark: SparkSession, sf_dir: str, qarr: DataFrame | None = None):
-    """Shared coarse-quantizer training context: (qarr, assign, prev,
-    fin) where prev/fin are the driver-side (cids, C) centroid lists
-    c_{R-1}/c_R. Callers that also train PQ pass the same ``qarr`` so
-    the corpus arrays materialize once."""
+def _km_fit(spark: SparkSession, sf_dir: str, qarr: DataFrame | None = None):
+    """The coarse-quantizer fit every k-means consumer shares: K =
+    max(_KM_K, ceil(N / _KM_TARGET)) (bit-identical to
+    ``_km_k_subquery``), the materialized (vec_id, qarr) base, and the
+    Lloyd rounds over ONE subspace as wide as the vector. Callers that
+    also train PQ pass the same ``qarr`` so the corpus arrays
+    materialize once. Returns (qarr, prev, fin) with prev/fin the
+    one-subspace codebooks c_{R-1}/c_R."""
     import math
 
     e = load_table(spark, sf_dir, "embeddings")
     k = max(_KM_K, math.ceil(e.count() / _KM_TARGET))
     if qarr is None:
         qarr = _quant_arrays(spark, sf_dir)
-    prev, fin = _km_train_np(qarr, k)
-    assign = materialize(_km_assign_np(qarr, *prev))
-    return qarr, assign, prev, fin
+    prev, fin = _lloyd_train(qarr, k, _EMB_DIMS, _KM_ROUNDS)
+    return qarr, prev, fin
+
+
+def _km_ctx(spark: SparkSession, sf_dir: str, qarr: DataFrame | None = None):
+    """Coarse training + the materialized final (vec_id, cid) assignment
+    against c_{R-1}. Returns (qarr, assign, fin)."""
+    qarr, prev, fin = _km_fit(spark, sf_dir, qarr)
+    assign = materialize(_lloyd_assign(qarr, prev).select("vec_id", "cid"))
+    return qarr, assign, fin
 
 
 def _kmeans_assign(
@@ -491,119 +544,94 @@ def _kmeans_assign(
     the Spark twin of ``_kmeans_ctes()``. Returns (qv, assign,
     centroids): qv = (vec_id, d, q) exploded integer vectors, assign =
     (vec_id, cid) after the final round, centroids = (cid, d, cq).
-    Training runs in the vectorized-native form (guide §4.2): per round
-    ONE map-only ArrowEval job over the materialized (vec_id, qarr)
-    base with exact numpy int64 distances, only the K·d partial sums
-    crossing an exchange — the old per-round d-keyed join + (vec, cid)
-    aggregate + argmin window + centroid shuffle (2 corpus-sized
-    exchanges × R rounds) is gone. Values are bit-identical: same
-    quantization, same exact int64 distances, same (dist, cid) argmin
-    total order, same floor-of-double centroid update."""
-    qarr, assign, prev, fin = _km_ctx(spark, sf_dir, qarr)
+    Training is the shared Lloyd trainer (:func:`_lloyd_train`) with
+    one subspace as wide as the vector: per round ONE map-only pass over
+    the materialized (vec_id, qarr) base with exact numpy int64
+    distances, only the K·d partial sums crossing an exchange. Values
+    match the oracle bit for bit: same quantization, same exact int64
+    distances, same (dist, cid) argmin total order, same
+    floor-of-double centroid update."""
+    qarr, assign, fin = _km_ctx(spark, sf_dir, qarr)
     qv = qarr.select("vec_id", F.posexplode("qarr").alias("d", "q"))
-    return qv, assign, _cent_frame(spark, *fin)
+    return qv, assign, _cent_frame(spark, fin).drop("m")
 
 
-def _km_assign_dist_np(qarr: DataFrame, prev, fin) -> DataFrame:
-    """Map-only (vec_id, cid, d2) pass: argmin assignment against
-    c_{R-1} plus the exact int64 squared distance to the FINAL c_R
-    centroid of the assigned cell — the (assign ⋈ cent)-then-aggregate
-    chain the SemDeDup keep-rule used, without the corpus-sized join
-    and (vec, d)-grain aggregate."""
+def _km_residual(Q, pC, p2f, fC):
+    """Per-batch coarse residual in exact int64: argmin of rows Q
+    against c_{R-1} (``pC``, the same pairing the a{R} CTE uses), then
+    subtract each row's FINAL c_R centroid (``fC``) through the
+    prev→fin index map ``p2f``. Returns (index into c_{R-1}, residual
+    rows)."""
+    bi, _ = _nearest_block(Q, pC)
+    return bi, Q - fC[p2f[bi]]
+
+
+def _km_residual_bc(spark: SparkSession, prev, fin):
+    """Broadcast (cids, C_{R-1}, prev→fin index map, C_R) for
+    :func:`_km_residual`."""
     import numpy as np
 
-    spark = qarr.sparkSession
-    pc, pC = prev
-    fc, fC = fin
+    [(pc, pC)] = prev
+    [(fc, fC)] = fin
     fin_idx = {cid: i for i, cid in enumerate(fc)}
+    # c_R is the aggregate of exactly this argmin-vs-c_{R-1} assignment,
+    # so every cid the assignment picks has a c_R row; a c_{R-1} cell no
+    # vector picked has none — map it to -1, which is never indexed.
     p2f = [fin_idx.get(cid, -1) for cid in pc]
-    bc = spark.sparkContext.broadcast(
-        (
-            np.array(pc, dtype=np.int64),
-            np.array(pC, dtype=np.int64),
-            np.array(p2f, dtype=np.int64),
-            np.array(fC, dtype=np.int64),
-        )
-    )
-
-    def part(it):
-        import numpy as np
-        import pandas as pd
-
-        cid_arr, pCn, p2fn, fCn = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            Q = _np_stack(pdf["qarr"])
-            bi, _ = _nearest_block(Q, pCn)
-            diff = Q - fCn[p2fn[bi]]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "cid": cid_arr[bi],
-                    "d2": np.einsum("nd,nd->n", diff, diff),
-                }
-            )
-
-    return qarr.select("vec_id", "qarr").mapInPandas(
-        part, "vec_id bigint, cid bigint, d2 bigint"
+    return spark.sparkContext.broadcast(
+        tuple(np.array(a, dtype=np.int64) for a in (pc, pC, p2f, fC))
     )
 
 
 def _km_ctx_dist(spark: SparkSession, sf_dir: str):
     """Coarse training + ONE materialized (vec_id, cid, d2) frame: the
-    final assignment with the exact distance to the assigned cell's
-    final centroid — what the SemDeDup keep-rule consumes. Returns
-    (qarr, ad, fin)."""
-    import math
-
-    e = load_table(spark, sf_dir, "embeddings")
-    k = max(_KM_K, math.ceil(e.count() / _KM_TARGET))
-    qarr = _quant_arrays(spark, sf_dir)
-    prev, fin = _km_train_np(qarr, k)
-    ad = materialize(_km_assign_dist_np(qarr, prev, fin))
-    return qarr, ad, fin
-
-
-def _km_residual_arr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coarse-quantizer residual vectors as arrays — the ``rqv`` CTE in
-    one map-only pass: each vector is argmin-assigned against c_{R-1}
-    (the same pairing the a{R} CTE uses) and its FINAL cell centroid
-    c_R is subtracted in exact int64. Every assigned cid has members by
-    construction, so the c_R lookup never misses. Used by the residual
-    PQ training in queries/ivfpq.py."""
-    import math
-
-    import numpy as np
-
-    e = load_table(spark, sf_dir, "embeddings")
-    k = max(_KM_K, math.ceil(e.count() / _KM_TARGET))
-    qarr = _quant_arrays(spark, sf_dir)
-    (pc, pC), (fc, fC) = _km_train_np(qarr, k)
-    fin_idx = {cid: i for i, cid in enumerate(fc)}
-    # c_R is the aggregate of exactly this argmin-vs-c_{R-1} assignment,
-    # so every cid the assignment picks has a c_R row; a c_{R-1} cell no
-    # vector picked has none — map it to -1, which is never indexed.
-    prev_to_fin = [fin_idx.get(cid, -1) for cid in pc]
-    bc = spark.sparkContext.broadcast(
-        (
-            np.array(pC, dtype=np.int64),
-            np.array(prev_to_fin, dtype=np.int64),
-            np.array(fC, dtype=np.int64),
-        )
-    )
+    final assignment with the exact squared distance to the assigned
+    cell's final centroid — what the SemDeDup keep-rule consumes, without
+    the corpus-sized (assign ⋈ cent) join and (vec, d)-grain aggregate.
+    Returns (qarr, ad)."""
+    qarr, prev, fin = _km_fit(spark, sf_dir)
+    bc = _km_residual_bc(spark, prev, fin)
 
     def part(it):
         import numpy as np
         import pandas as pd
 
-        pCn, p2f, fCn = bc.value
+        cid_arr, pC, p2f, fC = bc.value
         for pdf in it:
             if not len(pdf):
                 continue
-            Q = _np_stack(pdf["qarr"])
-            bi, _ = _nearest_block(Q, pCn)
-            R = Q - fCn[p2f[bi]]
+            bi, R = _km_residual(_np_stack(pdf["qarr"]), pC, p2f, fC)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].values,
+                    "cid": cid_arr[bi],
+                    "d2": np.einsum("nd,nd->n", R, R),
+                }
+            )
+
+    ad = materialize(
+        qarr.select("vec_id", "qarr").mapInPandas(
+            part, "vec_id bigint, cid bigint, d2 bigint"
+        )
+    )
+    return qarr, ad
+
+
+def _km_residual_arr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Coarse-quantizer residual vectors as arrays — the ``rqv`` CTE in
+    one map-only pass. Used by the residual PQ training in
+    queries/ivfpq.py."""
+    qarr, prev, fin = _km_fit(spark, sf_dir)
+    bc = _km_residual_bc(spark, prev, fin)
+
+    def part(it):
+        import pandas as pd
+
+        _, pC, p2f, fC = bc.value
+        for pdf in it:
+            if not len(pdf):
+                continue
+            _, R = _km_residual(_np_stack(pdf["qarr"]), pC, p2f, fC)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].values, "qarr": list(R)}
             )
@@ -811,184 +839,20 @@ _PQ_K = 4  # codebook size per subspace (2 bits; 8 subspaces pack into 16 bits)
 _PQ_ROUNDS = 2
 
 
-def _pq_cents_init(qarr: DataFrame):
-    """Initial PQ codebooks from the first ``_PQ_K`` vectors' subvectors:
-    list over m of (cids, C rows) — the pc0 CTE as driver lists."""
-    rows = sorted(
-        (int(r["vec_id"]), [int(x) for x in r["qarr"]])
-        for r in qarr.filter(F.col("vec_id") < _PQ_K).collect()
-    )
-    n_m = len(rows[0][1]) // _PQ_M_DIMS
-    cents = []
-    for m in range(n_m):
-        cents.append(
-            (
-                [cid for cid, _ in rows],
-                [
-                    arr[m * _PQ_M_DIMS : (m + 1) * _PQ_M_DIMS]
-                    for _, arr in rows
-                ],
-            )
-        )
-    return cents
-
-
-def _pq_bc(spark: SparkSession, cents):
-    import numpy as np
-
-    return spark.sparkContext.broadcast(
-        [(list(cids), np.array(C, dtype=np.int64)) for cids, C in cents]
-    )
-
-
-def _pq_update_np(qarr: DataFrame, cents):
-    """ONE PQ Lloyd round over all M codebooks as ONE Spark job — the
-    kmeans ``_km_update_np`` with the subspace threaded through: per
-    task, exact numpy argmin per subspace and (m, cid)-grain partial
-    sums; one tiny (m, cid, d) aggregate collected and floor-averaged
-    on the driver. Returns the next cents list."""
-    spark = qarr.sparkSession
-    bc = _pq_bc(spark, cents)
-    D = _PQ_M_DIMS
-
-    def part(it):
-        import numpy as np
-        import pandas as pd
-
-        cents_l = bc.value
-        sums: dict = {}
-        for pdf in it:
-            if not len(pdf):
-                continue
-            Q = _np_stack(pdf["qarr"])
-            for m, (cid_l, Cn) in enumerate(cents_l):
-                Qm = Q[:, m * D : (m + 1) * D]
-                bi, _ = _nearest_block(Qm, Cn)
-                for i in np.unique(bi):
-                    sel = Qm[bi == i]
-                    key = (m, int(cid_l[i]))
-                    s, n = sums.get(key, (np.zeros(D, dtype=np.int64), 0))
-                    sums[key] = (
-                        s + sel.sum(axis=0, dtype=np.int64),
-                        n + len(sel),
-                    )
-        out = {"m": [], "cid": [], "d": [], "s": [], "n": []}
-        for (m, cid), (s, n) in sums.items():
-            for j in range(D):
-                out["m"].append(m)
-                out["cid"].append(cid)
-                out["d"].append(m * D + j)
-                out["s"].append(int(s[j]))
-                out["n"].append(n)
-        if out["m"]:
-            yield pd.DataFrame(out)
-
-    agg = (
-        qarr.select("qarr")
-        .mapInPandas(
-            part, "m bigint, cid bigint, d bigint, s bigint, n bigint"
-        )
-        .groupBy("m", "cid", "d")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-    import math
-
-    by_m: dict = {}
-    for r in agg:
-        by_m.setdefault(r["m"], {}).setdefault(r["cid"], {})[
-            r["d"]
-        ] = math.floor(r["s"] / r["n"])
-    cents_new = []
-    for m in range(len(cents)):
-        per = by_m.get(m, {})
-        cids = sorted(per)
-        cents_new.append(
-            (cids, [[per[c][d] for d in sorted(per[c])] for c in cids])
-        )
-    return cents_new
-
-
-def _pq_train_rounds_np(qarr: DataFrame):
-    """R one-job PQ rounds. Returns (cents_prev, cents_fin) =
-    (pc_{R-1}, pc_R); assignments pair with pc_{R-1} exactly like the
-    unrolled oracle (pa{R} is argmin vs pc{R-1})."""
-    cents = _pq_cents_init(qarr)
-    prev = cents
-    for _ in range(_PQ_ROUNDS):
-        prev = cents
-        cents = _pq_update_np(qarr, cents)
-    return prev, cents
-
-
-def _pq_assign_np(qarr: DataFrame, cents) -> DataFrame:
-    """Map-only final PQ assignment: (vec_id, m, cid, dist) — M rows per
-    vector, exact numpy int64 subspace distances, no shuffle."""
-    spark = qarr.sparkSession
-    bc = _pq_bc(spark, cents)
-    D = _PQ_M_DIMS
-
-    def part(it):
-        import numpy as np
-        import pandas as pd
-
-        cents_l = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            Q = _np_stack(pdf["qarr"])
-            vec = pdf["vec_id"].values
-            frames = []
-            for m, (cid_l, Cn) in enumerate(cents_l):
-                cid_arr = np.array(cid_l, dtype=np.int64)
-                bi, bd = _nearest_block(Q[:, m * D : (m + 1) * D], Cn)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": vec,
-                            "m": np.full(len(vec), m, dtype=np.int64),
-                            "cid": cid_arr[bi],
-                            "dist": bd,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return qarr.select("vec_id", "qarr").mapInPandas(
-        part, "vec_id bigint, m bigint, cid bigint, dist bigint"
-    )
-
-
-def _pq_cent_frame(spark: SparkSession, cents) -> DataFrame:
-    """Final codebooks as a driver-local relation in the exploded
-    (m, cid, d, cq) shape consumers broadcast-join against (d global)."""
-    D = _PQ_M_DIMS
-    rows = [
-        (m, int(cid), m * D + j, int(cq))
-        for m, (cids, C) in enumerate(cents)
-        for cid, arr in zip(cids, C)
-        for j, cq in enumerate(arr)
-    ]
-    return spark.createDataFrame(
-        rows, "m bigint, cid bigint, d bigint, cq bigint"
-    )
-
-
 def _pq_train(
     spark: SparkSession, sf_dir: str, qarr: DataFrame | None = None
 ):
     """Milli-quantized subspace vectors + fixed-point PQ codebook training —
-    all M codebooks per round in ONE map-only ArrowEval job (guide §4.2:
-    exact numpy int64 inside the batch, only the M·k·d partial sums cross
-    an exchange; the old per-round (d, m)-keyed join + (vec, m, cid)
-    aggregate + argmin window + centroid shuffle is gone). Shared by the
-    emb_pq_* family and queries/ivfpq.py. Returns (qv, assign, cent):
-    qv = (vec_id, d, m, q) exploded integer vectors, assign = final-round
-    (vec_id, m, cid, dist) code assignments (materialized), cent = final
-    codebooks (m, cid, d, cq) as a driver-local relation — the same
-    M·k·d rows F.broadcast(cent) always round-tripped through the
-    driver. Values are bit-identical to the join form (same argmin
-    total order, same floor-of-double update)."""
+    the shared Lloyd trainer (:func:`_lloyd_train`) over M subspaces of
+    ``_PQ_M_DIMS``, all M codebooks per round in ONE map-only pass (guide
+    §4.2: exact numpy int64 inside the batch, only the M·k·d partial sums
+    cross an exchange). Shared by the emb_pq_* family and
+    queries/ivfpq.py. Returns (qv, assign, cent): qv = (vec_id, d, m, q)
+    exploded integer vectors, assign = final-round (vec_id, m, cid, dist)
+    code assignments (materialized), cent = final codebooks
+    (m, cid, d, cq) as a driver-local relation of M·k·d rows. Values
+    match the oracle bit for bit (same argmin total order, same
+    floor-of-double update)."""
     if qarr is None:
         qarr = _quant_arrays(spark, sf_dir)
     qv = qarr.select(
@@ -999,9 +863,9 @@ def _pq_train(
         (F.col("d") / _PQ_M_DIMS).cast("long").alias("m"),
         "q",
     )
-    prev, fin = _pq_train_rounds_np(qarr)
-    assign = materialize(_pq_assign_np(qarr, prev))
-    return qv, assign, _pq_cent_frame(spark, fin)
+    prev, fin = _lloyd_train(qarr, _PQ_K, _PQ_M_DIMS, _PQ_ROUNDS)
+    assign = materialize(_lloyd_assign(qarr, prev))
+    return qv, assign, _cent_frame(spark, fin)
 
 
 def _pq_ctes() -> str:
@@ -2135,7 +1999,9 @@ def emb_knn_dist_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qarr = _quant_arrays(spark, sf_dir)
     budget = _index_row_budget(qarr, "qarr", 4_000_000, 4 << 30)
-    idx_rows = qarr.select("vec_id", "qarr").collect()
+    # the size gate rides the index collect: at most budget + 1 rows
+    # ever reach the driver, whatever the corpus size
+    idx_rows = qarr.select("vec_id", "qarr").limit(budget + 1).collect()
     if len(idx_rows) > budget:
         raise ValueError(
             f"emb_knn_dist_outliers: {len(idx_rows)} index rows exceed the "

@@ -31,10 +31,10 @@ from hawaiidatapipeline_spark.queries.emb_extra import (
     _PQR_TOPK,
     _kmeans_assign,
     _kmeans_ctes,
-    _pq_assign_np,
+    _lloyd_assign,
+    _lloyd_train,
     _pq_ctes,
     _pq_train,
-    _pq_train_rounds_np,
     _quant_arrays,
 )
 
@@ -616,12 +616,12 @@ def _residual_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals. Returns the final (vec_id, m, cid, dist) code assignment —
     exposed separately so tests can compare total quantization error
     against the raw-vector codes. Residuals are built in one map-only
-    numpy pass (``_km_residual_arr``) and the PQ rounds run in the
-    vectorized-native one-job-per-round form (guide §4.2) — the old
-    exploded join + per-round shuffles are gone; values bit-identical."""
+    numpy pass (``_km_residual_arr``) and the PQ rounds run in the shared
+    one-pass-per-round Lloyd trainer (``_lloyd_train``, guide §4.2);
+    values match the oracle bit for bit."""
     rarr = _km_residual_arr(spark, sf_dir)
-    prev, _ = _pq_train_rounds_np(rarr)
-    return materialize(_pq_assign_np(rarr, prev))
+    prev, _ = _lloyd_train(rarr, _PQ_K, _PQ_M_DIMS, _PQ_ROUNDS)
+    return materialize(_lloyd_assign(rarr, prev))
 
 
 def _residual_codes_sql() -> str:

@@ -140,7 +140,7 @@ def llm_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs so bucket membership matches bit-for-bit; the cosine contract
     is llm_dedup_embedding's. Hash-verified at sf0.01 (m=1) AND sf0.1
     (m=10)."""
-    qarr, assign, _, _ = _km_ctx(spark, sf_dir)
+    qarr, assign, _ = _km_ctx(spark, sf_dir)
     from hawaiidatapipeline_spark.operators.similarity import (
         as_double_vec,
         cosine_pairs_in_cells,
@@ -222,7 +222,7 @@ def llm_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle shares the unrolled k-means CTEs."""
     import math
 
-    qarr, assign, _, _ = _km_ctx(spark, sf_dir)
+    qarr, assign, _ = _km_ctx(spark, sf_dir)
     from hawaiidatapipeline_spark.operators.similarity import (
         as_double_vec,
         cosine_pairs_exact,
@@ -286,7 +286,7 @@ def semdedup_drop_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment and the keep-rule distance (emb_extra._km_ctx_dist):
     # the old exploded-qv ⋈ assign ⋈ centroid join + (vec)-grain
     # aggregate is a map-only numpy pass now (guide §4.2).
-    qarr, ad, _ = _km_ctx_dist(spark, sf_dir)
+    qarr, ad = _km_ctx_dist(spark, sf_dir)
     assign = ad.select("vec_id", "cid")
     bkts = _semdedup_buckets(spark, qarr, assign)
     e = as_double_vec(load_table(spark, sf_dir, "embeddings"))
@@ -390,7 +390,7 @@ def llm_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # same one-frame assignment+distance shape as semdedup_drop_set
-    qarr, ad, _ = _km_ctx_dist(spark, sf_dir)
+    qarr, ad = _km_ctx_dist(spark, sf_dir)
     assign = ad.select("vec_id", "cid")
     bkts = _semdedup_buckets(spark, qarr, assign)
     e = as_double_vec(load_table(spark, sf_dir, "embeddings"))

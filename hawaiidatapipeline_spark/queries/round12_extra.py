@@ -32,10 +32,13 @@ Two modelling choices carry the scale story:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hawaiidatapipeline_spark.operators.materialize import materialize
+from hawaiidatapipeline_spark.operators.materialize import (
+    materialize,
+    observed_metric,
+)
 from hawaiidatapipeline_spark.queries._registry import new_module_registry
 from hawaiidatapipeline_spark.queries.selection_extra import (
     _DSIR_B,
@@ -185,8 +188,10 @@ def _qc_train_from(spark: SparkSession, docf: DataFrame, lab: DataFrame):
     import pandas as pd
 
     docf = materialize(docf)
-    lab = materialize(lab)
-    n = lab.count()
+    # the corpus size rides the lab materialization (no count() job)
+    obs = Observation()
+    lab = materialize(lab.observe(obs, F.count(F.lit(1)).alias("n")))
+    n = int(observed_metric(obs, "n"))
     # per-bucket corpus means: B rows — collected once, reused for the
     # vector build, the w0 feature list, and the returned dense mapping
     means_rows = sorted(

@@ -102,9 +102,11 @@ def test_sorted_export_files_have_disjoint_ranges(spark):
     files only. Natural (unsorted) layout is the control: its per-file
     ranges all overlap."""
     import glob
+    import os
 
     import pyarrow.parquet as pq
 
+    from hawaiidatapipeline_spark import CACHE_DIR
     from hawaiidatapipeline_spark.queries.layout import sink_sorted_export
 
     def file_ranges(path):
@@ -123,16 +125,15 @@ def test_sorted_export_files_have_disjoint_ranges(spark):
         return sorted(out)
 
     sink_sorted_export(spark, SF0001)
-    ranges = file_ranges("/root/repo/.cache/lineitem_sorted")
+    ranges = file_ranges(os.path.join(CACHE_DIR, "lineitem_sorted"))
     assert len(ranges) == 8
     for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
         assert hi_prev <= lo_next, f"overlapping file ranges: {ranges}"
 
     li = load_table(spark, SF0001, "lineitem").select("l_orderkey", "l_shipdate")
-    li.repartition(8).write.mode("overwrite").parquet(
-        "/root/repo/.cache/lineitem_natural"
-    )
-    nat = file_ranges("/root/repo/.cache/lineitem_natural")
+    natural = os.path.join(CACHE_DIR, "lineitem_natural")
+    li.repartition(8).write.mode("overwrite").parquet(natural)
+    nat = file_ranges(natural)
     overlaps = sum(
         1 for (_, hi_prev), (lo_next, _) in zip(nat, nat[1:]) if hi_prev > lo_next
     )

@@ -100,3 +100,24 @@ def test_ann_recall_report_matches_python(spark):
     }
     assert got == want
     assert sum(n for n, _, _, _ in got.values()) == len(probes)
+
+
+def test_knn_outliers_index_collect_stops_at_budget(spark, monkeypatch):
+    """The broadcast-index size gate rides the collect itself: with a
+    budget below the corpus size the key must raise after pulling only
+    budget + 1 rows, never the whole corpus."""
+    import pytest
+
+    from hawaiidatapipeline_spark.operators import similarity
+    from hawaiidatapipeline_spark.queries.emb_extra import emb_knn_dist_outliers
+
+    budget = 7
+    n = load_table(spark, SF0001, "embeddings").count()
+    assert n > budget + 1
+    monkeypatch.setattr(similarity, "_index_row_budget", lambda *a: budget)
+    with pytest.raises(ValueError) as err:
+        emb_knn_dist_outliers(spark, SF0001)
+    assert f"{budget + 1} index rows exceed the broadcast budget {budget}" in str(
+        err.value
+    )
+    assert f"{n} index rows" not in str(err.value)

@@ -5,9 +5,10 @@ the parquet reader, dims broadcast, codegen covers the hot path. Full audit
 across 15 queries: ``python tools/explain_audit.py``.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.explain_audit import check, plan_text  # noqa: E402
 

@@ -17,13 +17,16 @@ from pyspark.sql import functions as F
 
 from hawaiidatapipeline_spark.queries import emb_extra
 from hawaiidatapipeline_spark.queries.emb_extra import (
+    _EMB_DIMS,
     _KM_K,
+    _KM_ROUNDS,
     _KM_TARGET,
     _PQ_K,
     _PQ_M_DIMS,
-    _km_train_np,
+    _PQ_ROUNDS,
+    _cent_frame,
+    _lloyd_train,
     _nearest_block,
-    _pq_train_rounds_np,
     _quant_arrays,
 )
 
@@ -52,29 +55,40 @@ def test_nearest_block_tie_breaks_across_blocks(monkeypatch):
     assert bd.tolist() == [1, 1]
 
 
-def test_kmeans_driver_collect_is_broadcast_sized(spark):
+@pytest.fixture(scope="module", params=["kmeans", "pq"])
+def lloyd_run(request, spark):
+    """The shared Lloyd trainer at both subspace widths: k-means (one
+    subspace as wide as the vector, corpus-scaled K) and PQ
+    (``_PQ_M_DIMS``-wide subspaces, ``_PQ_K`` rows per codebook).
+    Returns (width, k, prev, fin)."""
     qarr = _quant_arrays(spark, SF0001)
-    n = qarr.count()
-    k = max(_KM_K, math.ceil(n / _KM_TARGET))
-    (pc, pC), (fc, fC) = _km_train_np(qarr, k)
-    # the driver holds at most K centroid rows of d values per round —
-    # the same K*d cells F.broadcast(centroids) pulled through the
-    # driver in the old join form; NEVER corpus-sized
-    for cids, C in ((pc, pC), (fc, fC)):
-        assert len(cids) <= k
-        assert all(len(row) == 64 for row in C)
-        assert sorted(cids) == list(cids)
+    if request.param == "kmeans":
+        k = max(_KM_K, math.ceil(qarr.count() / _KM_TARGET))
+        width, rounds = _EMB_DIMS, _KM_ROUNDS
+    else:
+        k, width, rounds = _PQ_K, _PQ_M_DIMS, _PQ_ROUNDS
+    prev, fin = _lloyd_train(qarr, k, width, rounds)
+    return width, k, prev, fin
 
 
-def test_pq_driver_collect_is_codebook_sized(spark):
-    qarr = _quant_arrays(spark, SF0001)
-    prev, fin = _pq_train_rounds_np(qarr)
+def test_lloyd_driver_collect_is_codebook_sized(lloyd_run):
+    # per round the driver holds at most k centroid rows of `width`
+    # values per subspace — the same cells F.broadcast(centroids) pulled
+    # through the driver in the old join form; NEVER corpus-sized
+    width, k, prev, fin = lloyd_run
     for cents in (prev, fin):
-        assert len(cents) == 64 // _PQ_M_DIMS  # M subspaces
+        assert len(cents) == 64 // width  # M subspaces
         for cids, C in cents:
-            assert len(cids) <= _PQ_K  # k rows per codebook
-            assert all(len(row) == _PQ_M_DIMS for row in C)
+            assert len(cids) <= k  # k rows per codebook
+            assert all(len(row) == width for row in C)
             assert sorted(cids) == list(cids)
+
+
+def test_cent_frame_is_local_relation(spark, lloyd_run):
+    width, _, _, fin = lloyd_run
+    cent = _cent_frame(spark, fin)
+    assert cent.count() == sum(len(cids) for cids, _ in fin) * width
+    _assert_local_relation(cent)
 
 
 @pytest.fixture(scope="module")
@@ -210,6 +224,6 @@ def test_kmeans_assign_matches_old_join_form(spark):
     C = [[by_cid[c][d] for d in sorted(by_cid[c])] for c in cids]
     new = {
         r["vec_id"]: r["cid"]
-        for r in emb_extra._km_assign_np(qarr, cids, C).collect()
+        for r in emb_extra._lloyd_assign(qarr, [(cids, C)]).collect()
     }
     assert new == rows

@@ -14,7 +14,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -22,7 +23,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     from hawaiidatapipeline_spark.queries import collect

@@ -224,12 +224,16 @@ def main():
             print(f"WEAK {name}: rows={len(srows)} ({dt:.1f}s) [no oracle]")
             n_weak += 1
             continue
+        t1 = time.time()
         try:
             dcols, drows, dkinds = pandas_rows(con.execute(oracles[name]).df())
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e!r}"[:500])
             n_fail += 1
             continue
+        # the oracle can dwarf the Spark side (minutes for the corpus
+        # pipelines), so both times are reported
+        timing = f"({dt:.1f}s spark, {time.time() - t1:.1f}s oracle)"
         problems = []
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
@@ -261,10 +265,13 @@ def main():
                 if only_d:
                     problems.append(f"duck-only: {only_d}")
         if problems:
-            print(f"FAIL {name}: " + "; ".join(str(p) for p in problems)[:800])
+            print(
+                f"FAIL {name}: {timing} "
+                + "; ".join(str(p) for p in problems)[:800]
+            )
             n_fail += 1
         else:
-            print(f"PASS {name}: rows={len(srows)} ({dt:.1f}s)")
+            print(f"PASS {name}: rows={len(srows)} {timing}")
             n_pass += 1
 
     print(f"\n== {n_pass} pass, {n_weak} weak, {n_fail} fail ==")

@@ -17,10 +17,13 @@ query fails.
 from __future__ import annotations
 
 import json
+import os
 import re
 import subprocess
 import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -42,7 +45,7 @@ def main() -> int:
         ["git", "status", "--porcelain"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     stale = [
         ln
@@ -61,15 +64,15 @@ def main() -> int:
     # COVERAGE_HISTORY.md can never lag the evidence it summarizes.
     subprocess.run(
         [sys.executable, "tools/coverage_history.py"]
-        + sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")),
-        cwd="/root/repo",
+        + sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))),
+        cwd=REPO,
         check=True,
     )
     proc = subprocess.run(
         [sys.executable, "tools/check_correctness.py", "--plain-session", SF_DIR],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     out = proc.stdout
     statuses = {"PASS": [], "WEAK": [], "FAIL": []}
@@ -86,7 +89,7 @@ def main() -> int:
          "--no-header", "-p", "no:cacheprovider"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     stail = (sproc.stdout.strip().splitlines() or [""])[-1]
     spass = re.search(r"(\d+) passed", stail)
@@ -101,12 +104,12 @@ def main() -> int:
     # driver row that are ALSO outside the next sweep window (_FRONT) are
     # only ever proven by this closing sweep — name them and their status
     # here so the record says explicitly which keys rest on it.
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from hawaiidatapipeline_spark.queries import _FRONT, collect
     from tools.rotate_window import row_is_green
 
     driver_green: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         for key, row in json.load(open(path)).items():
             if row_is_green(row):
                 driver_green.add(key)
@@ -143,10 +146,10 @@ def main() -> int:
         "driver_unseen_all_green_here": sorted(unseen) == sorted(unseen_ok),
         "wall_s": round(time.time() - t0, 1),
     }
-    with open(f"/root/repo/CLOSING_r{rnd:02d}.json", "w") as f:
+    with open(os.path.join(REPO, f"CLOSING_r{rnd:02d}.json"), "w") as f:
         json.dump(record, f, indent=1)
         f.write("\n")
-    with open("/root/repo/PROGRESS.jsonl", "a") as f:
+    with open(os.path.join(REPO, "PROGRESS.jsonl"), "a") as f:
         f.write(json.dumps(record) + "\n")
     print(json.dumps(record))
     if proc.returncode != 0 and not statuses["FAIL"]:

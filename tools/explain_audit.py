@@ -27,10 +27,12 @@ formatted plans for the judge.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # query -> list of assertions (name, predicate over plan text)
 AUDITS: dict[str, list[str]] = {

@@ -21,7 +21,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region",
@@ -40,7 +41,9 @@ TABLES = [
 def main() -> int:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_dir = (
-        sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.cache/sf0.1_mrg32"
+        sys.argv[2]
+        if len(sys.argv) > 2
+        else os.path.join(REPO, ".cache", "sf0.1_mrg32")
     )
     n_files = int(sys.argv[3]) if len(sys.argv) > 3 else 32
     if os.path.exists(out_dir):

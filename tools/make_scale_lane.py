@@ -31,12 +31,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
-DEFAULT_OUT = "/root/repo/.cache/sf0.3"
+DEFAULT_OUT = os.path.join(REPO, ".cache", "sf0.3")
 STRIDE = 1_000_000_000
 REPLICAS = 3
 

@@ -10,11 +10,13 @@ Run: ``python tools/perf_evidence.py [sf_dir]`` (default sf0.1).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PROBES = [
     # query, one-line expectation the numbers should back up

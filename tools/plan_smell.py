@@ -32,10 +32,12 @@ Run: ``python tools/plan_smell.py [sf_dir]``. Exit 0 = no new smells.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # deliberate exceptions, each with the reason the smell is intended
 ALLOW_CARTESIAN = {

@@ -19,10 +19,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF01 = "/root/testdata/sf0.1"
-SF10 = "/root/repo/.cache/sf1.0"
+SF10 = os.path.join(REPO, ".cache", "sf1.0")
 RATIO = 10.0
 
 PROBES = [

@@ -9,14 +9,16 @@ Run: ``python tools/scaling_probe.py``.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 # third point: synthesized lane (tools/make_scale_lane.py) — 3× sf0.1
-SF3 = "/root/repo/.cache/sf0.3"
+SF3 = os.path.join(REPO, ".cache", "sf0.3")
 SF3_RATIO = 3.0
 PROBES = [
     ("pricing_summary", "agg over 6 groups — time ~ scan, output constant"),

@@ -31,9 +31,11 @@ Run: ``python tools/skew_stress.py``. Exit 0 = all three engaged/held.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 

@@ -22,12 +22,14 @@ Run: ``python tools/streaming_latency.py [--write PERF_EVIDENCE.md]``.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -13,9 +13,11 @@ canonical row hashes. Run:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def run_regime(master: str, split_bytes: int, sf_dir: str, only: set[str]):
