@@ -17,10 +17,12 @@ Structured Streaming unification Spark is built around.
 from __future__ import annotations
 
 import os
-from typing import Iterable
+import shutil
+import uuid
+from typing import Callable, Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -29,22 +31,6 @@ from hawaiidatapipeline_spark.registry import load_table, normalize_event_time
 from hawaiidatapipeline_spark.session import prepare_session
 
 DEFAULT_WATERMARK = "1 hour"
-
-
-def _read_state(spark: SparkSession, *paths: str):
-    """Read a sink's persisted state from the first of ``paths`` that
-    exists, or return None when NONE exists (genuinely no state yet —
-    the first micro-batch). A path that exists but fails to read
-    (corrupt/partially-written files from an interrupted non-atomic
-    overwrite, transient FS errors) RAISES instead of being treated as
-    'first batch': silently restarting an accumulated-state sink from
-    the current batch would lose all prior window state while claiming
-    an idempotent merge. Callers pass ``target`` or ``(target,
-    target + '.old')`` when they use the rename-aside swap."""
-    for p in paths:
-        if os.path.exists(p):
-            return spark.read.parquet(p)
-    return None
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,8 +51,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regenerated same-size fixture with an equal-or-older mtime (e.g.
     # restored from an archive) keep serving stale data. Staging happens once
     # per stream construction and the fixture is small — just copy.
-    import shutil
-
     os.makedirs(landing, exist_ok=True)
     shutil.copyfile(src, staged)
     batch = spark.read.parquet(src)
@@ -118,8 +102,6 @@ def topk_per_window(counts: DataFrame, k: int = 3) -> DataFrame:
     rank (count desc, event_type asc ties) and keep rank ≤ k. A plain batch
     transformation — run it in the sink (foreachBatch) or over the
     materialized counts table; never on the unfinished stream."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), F.col("event_type")
     )
@@ -306,14 +288,14 @@ def running_counters_tws(events: DataFrame, allow_fallback: bool = False) -> Dat
     RocksDB state-store provider (column-family support) and the protobuf
     package (``transform_with_state_available``).
 
-    ``allow_fallback=True`` degrades to a semantically identical
-    ``applyInPandasWithState`` implementation (same output schema, same
-    per-batch cumulative emissions, same rounding) when protobuf is
-    absent — the operator's CONTRACT stays testable on images without the
-    TWS wire dependency, and the strict path still runs unchanged
-    wherever protobuf exists."""
+    ``allow_fallback=True`` degrades to ``lifetime_counters`` (same
+    output schema, same per-batch cumulative emissions, same rounding,
+    over ``applyInPandasWithState``, which speaks Arrow, not protobuf)
+    when protobuf is absent — the operator's CONTRACT stays testable on
+    images without the TWS wire dependency, and the strict path still
+    runs unchanged wherever protobuf exists."""
     if allow_fallback and not transform_with_state_available():
-        return _running_counters_tws_fallback(events)
+        return lifetime_counters(events)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -349,38 +331,6 @@ def running_counters_tws(events: DataFrame, allow_fallback: bool = False) -> Dat
         outputStructType="user_id bigint, n_events bigint, total_value double",
         outputMode="Update",
         timeMode="None",
-    )
-
-
-def _running_counters_tws_fallback(events: DataFrame) -> DataFrame:
-    """Protobuf-free twin of ``running_counters_tws``: identical output
-    schema and per-batch cumulative semantics, expressed with
-    ``applyInPandasWithState`` (which speaks Arrow, not protobuf). Used
-    only via ``running_counters_tws(allow_fallback=True)`` on images
-    missing the TWS wire dependency."""
-
-    def update(
-        key, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 6)],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        stateStructType="n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -574,6 +524,150 @@ def late_data_audit(events: DataFrame, threshold: str = "30 minutes"):
     return fn
 
 
+# ------------------------------------------------------------------ state store
+
+
+def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a sink's persisted state from ``path``, or from the
+    ``<path>.old`` survivor an interrupted ``_swap_in`` leaves behind;
+    None when neither exists (genuinely no state yet — the first
+    micro-batch). A dir that exists but fails to read (corrupt or
+    partially-written files, transient FS errors) RAISES instead of being
+    treated as 'first batch': silently restarting an accumulated-state
+    sink from the current batch would lose all prior state while claiming
+    an idempotent merge."""
+    for p in (path, path + ".old"):
+        if os.path.exists(p):
+            return spark.read.parquet(p)
+    return None
+
+
+def _swap_in(df: DataFrame, path: str) -> None:
+    """Replace the state dir at ``path`` with ``df``, crash-safe: write
+    to a temp dir, rename the old target aside to ``<path>.old``, rename
+    the temp dir in, and only then drop ``.old``. A failed write never
+    clobbers the target, and at every instant one of {path, path.old}
+    holds a complete state, so a crash at any point leaves a recoverable
+    directory (``_read_state`` and the next batch fall back to ``.old``).
+    A plain rmtree-then-rename would have a window where BOTH are gone,
+    and a checkpoint-WAL replay against the resulting empty target would
+    silently drop every key absent from the replayed batch. ``df`` may
+    read ``path`` itself: its write completes before either rename.
+    Object stores write a new prefix and repoint a manifest; a table
+    format (Delta/Iceberg) turns the swap into a transactional commit."""
+    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(tmp)
+    old = path + ".old"
+    if os.path.exists(path):
+        shutil.rmtree(old, ignore_errors=True)
+        os.replace(path, old)
+    os.replace(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _start(stream_df: DataFrame, fn, checkpoint: str, trigger: dict | None):
+    """Start ``fn`` as the stream's foreachBatch sink. ``trigger=None``
+    drains what is available and stops; pass e.g. ``{"processingTime":
+    "1 second"}`` for a continuous cadence (latency measured in
+    tools/streaming_latency.py)."""
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
+def _state_sink(
+    stream_df: DataFrame,
+    path: str,
+    checkpoint: str,
+    trigger: dict | None,
+    prepare: Callable[[DataFrame], DataFrame],
+    combine: Callable[[DataFrame, DataFrame], DataFrame],
+    stamped: bool,
+):
+    """The exactly-once protocol of every state-keeping foreachBatch
+    sink. Per micro-batch: ``batch = prepare(batch_df)``; read the stored
+    state (``_read_state``); ``merged = batch`` on the first batch, else
+    ``combine(current, batch)``; ``_swap_in(merged, path)``. The merged
+    state goes to storage in a distributed write, never through the
+    driver.
+
+    ``stamped`` is for folds that are NOT idempotent under replay (sums,
+    unions of per-row facts): the state carries a long ``_last_batch``
+    stamp, and a batch whose id is <= the stored max is already folded in
+    and is skipped — the guard's one scalar read is the only driver
+    collect. A target without the column is folded into as it is.
+    Idempotent folds (key upsert, distinct-union k-smallest, op_seq
+    arbitrated CDC) pass ``stamped=False``: a replayed batch re-merges to
+    the same state."""
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        batch = prepare(batch_df)
+        current = _read_state(batch_df.sparkSession, path)
+        if stamped and current is not None and "_last_batch" in current.columns:
+            applied = current.agg(F.max("_last_batch")).collect()[0][0]
+            if applied is not None and batch_id <= applied:
+                return  # replayed batch already folded in
+            current = current.drop("_last_batch")
+        merged = batch if current is None else combine(current, batch)
+        if stamped:
+            merged = merged.withColumn("_last_batch", F.lit(batch_id).cast("long"))
+        _swap_in(merged, path)
+
+    return _start(stream_df, fold, checkpoint, trigger)
+
+
+def _k_smallest(hashes: DataFrame, group: str, k: int) -> DataFrame:
+    """The k smallest hashes ``h`` per ``group``, as (group, h): a KMV /
+    theta synopsis. Applied to the union → distinct of two synopses it is
+    their lossless merge (``agg_kmv_merge_proof``)."""
+    w = Window.partitionBy(group).orderBy("h")
+    return (
+        hashes.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(group, "h")
+    )
+
+
+def _lww_newest(ops: DataFrame, key: str) -> DataFrame:
+    """Last-writer-wins within one CDC batch: the newest op (highest
+    op_seq) per key."""
+    w = Window.partitionBy(key).orderBy(F.col("op_seq").desc())
+    return (
+        ops.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _lww_apply(current: DataFrame, newest: DataFrame, key: str) -> DataFrame:
+    """Apply a folded CDC batch (``_lww_newest``) to the stored state
+    with op_seq arbitration BOTH ways: a current row survives unless the
+    batch holds a STRICTLY newer op for its key, and a batch op lands
+    only if it is newer than what the state already recorded — on an
+    op_seq tie the current row stays. Re-applying an old op is a no-op,
+    which makes replayed or out-of-order batches idempotent."""
+    batch_seq = newest.select(
+        F.col(key).alias("_k"), F.col("op_seq").alias("_new_seq")
+    )
+    kept = (
+        current.join(batch_seq, current[key] == F.col("_k"), "left_outer")
+        .filter(F.col("_new_seq").isNull() | (F.col("op_seq") >= F.col("_new_seq")))
+        .drop("_k", "_new_seq")
+    )
+    cur_seq = current.select(
+        F.col(key).alias("_k"), F.col("op_seq").alias("_cur_seq")
+    )
+    landed = (
+        newest.join(cur_seq, newest[key] == F.col("_k"), "left_outer")
+        .filter(F.col("_cur_seq").isNull() | (F.col("op_seq") > F.col("_cur_seq")))
+        .drop("_k", "_cur_seq")
+    )
+    return kept.unionByName(landed)
+
+
 # ------------------------------------------------------------------ sinks
 
 
@@ -600,47 +694,21 @@ def run_merge_sink(stream_df: DataFrame, target_path: str, key: str, checkpoint:
     (Delta/Iceberg) the body becomes the transactional MERGE and gains
     partition-level rewrites + concurrent-writer safety. Exactly-once comes
     from the checkpoint WAL: a replayed batch re-merges idempotently
-    (same keys → same final state)."""
-    import uuid
+    (same keys → same final state). State protocol: ``_state_sink``."""
 
-    from pyspark.sql import Window
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def dedup(batch_df: DataFrame) -> DataFrame:
         w = Window.partitionBy(key).orderBy(F.lit(1))
-        deduped = (
+        return (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # missing path = first batch; a DAMAGED target raises (state loss
-        # must be loud, not a silent restart from the current batch)
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:
-            merged = deduped
-        else:
-            merged = current.join(
-                deduped.select(key), key, "left_anti"
-            ).unionByName(deduped)
-        # write to a temp dir then rename-aside swap — a failed write never
-        # clobbers the target, and a full state dir exists at every instant
-        # (object stores: write new prefix + repoint the manifest)
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
 
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
+    def upsert(current: DataFrame, batch: DataFrame) -> DataFrame:
+        return current.join(batch.select(key), key, "left_anti").unionByName(batch)
 
-    return (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _state_sink(
+        stream_df, target_path, checkpoint, None, dedup, upsert, stamped=False
     )
 
 
@@ -658,11 +726,9 @@ def run_aggregate_sink(
     the running aggregate here IS the target table, so any engine can read
     it mid-stream and the state survives checkpoint loss up to one batch.
     Merge cost ∝ batch keys + stored group cardinality, never history.
-    NOTE: parquet overwrite is used for the fixture; a table format makes
-    the swap transactional. Exactly-once (ADVICE r10): the table carries a
-    ``_last_batch`` stamp — a replayed batch whose id is <= the stamp is
-    skipped instead of double-merged, giving the sum-fold the same replay
-    safety the merge/kmv/cdc sinks get structurally from key dedup."""
+    Exactly-once (ADVICE r10): sums are not idempotent, so the sink is
+    ``_state_sink``-stamped — a replayed batch is skipped instead of
+    double-merged."""
 
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy(key).agg(
@@ -670,44 +736,15 @@ def run_aggregate_sink(
             F.sum(F.col("value").cast("decimal(18,6)")).alias("total"),
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_agg = partial(batch_df)
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:  # first batch only; a damaged target raises
-            merged = batch_agg
-        else:
-            if "_last_batch" in current.columns:
-                applied = current.agg(F.max("_last_batch")).collect()[0][0]
-                if applied is not None and batch_id <= applied:
-                    return  # replayed batch already folded in — skip
-                current = current.drop("_last_batch")
-            merged = (
-                current.unionByName(batch_agg)
-                .groupBy(key)
-                .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-            )
-        merged = merged.withColumn("_last_batch", F.lit(batch_id))
-        staged = merged.collect()  # tiny: one row per key
-        import shutil
-        import uuid
-
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(staged, merged.schema).write.mode("overwrite").parquet(
-            tmp
+    def add(current: DataFrame, batch: DataFrame) -> DataFrame:
+        return (
+            current.unionByName(batch)
+            .groupBy(key)
+            .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
         )
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
 
-    return (
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        events, target_path, checkpoint, trigger, partial, add, stamped=True
     )
 
 
@@ -741,8 +778,6 @@ def classify_late(
     Scale: one per-key ordered window (per-key event counts bound the
     partition) + an optional broadcast join against key-cardinality state.
     """
-    from pyspark.sql import Window
-
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     w = (
         Window.partitionBy(key_col)
@@ -787,17 +822,15 @@ def run_late_audit_sink(
     Exactly-once shape: each batch writes into ``batch_id=N`` partition
     dirs with overwrite, so a replayed batch rewrites its own partition
     instead of double-appending; the per-key max state merge is a max()
-    fold, idempotent under replay by construction. State is read
-    loss-proof (_read_state) and swapped rename-aside like the merge sink.
+    fold, idempotent under replay by construction. State is read with
+    ``_read_state`` and written with ``_swap_in``; routing needs the state
+    before the swap, so the batch stays persisted across both.
     Scale: state is one row per key; the routing is a map-side split of
     the already-classified batch — no shuffle beyond the per-key window.
     """
-    import shutil
-    import uuid
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = _read_state(spark, state_path, state_path + ".old")
+        state = _read_state(batch_df.sparkSession, state_path)
         classified = classify_late(
             batch_df,
             prior_max=state,
@@ -814,34 +847,18 @@ def run_late_audit_sink(
                 classified.filter(pred).write.mode("overwrite").parquet(
                     os.path.join(audit_path, name, f"batch_id={batch_id}")
                 )
-            batch_max = classified.groupBy(key_col).agg(
-                F.max("ts").alias("max_ts")
-            )
-            if state is None:
-                merged = batch_max
-            else:
+            merged = classified.groupBy(key_col).agg(F.max("ts").alias("max_ts"))
+            if state is not None:
                 merged = (
-                    state.unionByName(batch_max)
+                    state.unionByName(merged)
                     .groupBy(key_col)
                     .agg(F.max("max_ts").alias("max_ts"))
                 )
-            tmp = f"{state_path}__tmp_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").parquet(tmp)
-            old = state_path + ".old"
-            if os.path.exists(state_path):
-                shutil.rmtree(old, ignore_errors=True)
-                os.replace(state_path, old)
-            os.replace(tmp, state_path)
-            shutil.rmtree(old, ignore_errors=True)
+            _swap_in(merged, state_path)
         finally:
             classified.unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return _start(stream_df, route, checkpoint, trigger)
 
 
 def run_to_parquet(stream_df: DataFrame, path: str, checkpoint: str):
@@ -866,98 +883,36 @@ def run_cdc_sink(
 ):
     """foreachBatch CDC applier — the streaming twin of the batch
     ``etl_cdc_apply`` fold. The stream carries (key, op ∈ I/U/D, op_seq,
-    payload); each micro-batch folds to last-writer-wins per key, then
-    applies against the target with op_seq arbitration BOTH ways: a
-    current row survives unless the batch holds a STRICTLY newer op for
-    its key, and a batch op lands only if it is newer than what the
-    target already recorded. Storing op_seq in the target is what makes
-    replayed or out-of-order batches idempotent — re-applying an old op
-    is a no-op, which is the property checkpoint-WAL replay needs.
+    payload); each micro-batch folds to last-writer-wins per key
+    (``_lww_newest``), then applies against the target with op_seq
+    arbitration BOTH ways (``_lww_apply``). Storing op_seq in the target
+    is what makes replayed or out-of-order batches idempotent —
+    re-applying an old op is a no-op, which is the property
+    checkpoint-WAL replay needs, so the sink is unstamped.
     Tombstones (op='D') are RETAINED in the target (not physically
     removed): a late-arriving older insert must lose the op_seq
     arbitration against the tombstone, or deleted keys resurrect — the
     classic CDC-applier bug. ``read_cdc_target`` filters them on read;
     a compaction pass may drop tombstones older than the source's
-    max-lateness window.
-
-    Swap discipline: the new state is written to a temp dir, then the
-    old target is renamed aside to ``<target>.old`` BEFORE the temp dir
-    is renamed into place, and only then is ``.old`` removed. At every
-    instant one of {target, target.old} holds a complete last-applied
-    state, so a crash at any point leaves a recoverable directory (the
-    reader and the next batch fall back to ``.old``) — a plain
-    rmtree-then-rename would have a window where BOTH are gone and a
-    checkpoint-WAL replay against the resulting empty target would
-    silently drop every key absent from the replayed batch. A table
-    format upgrades the body to MERGE with snapshot isolation."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import Window
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        w = Window.partitionBy(key).orderBy(F.col("op_seq").desc())
-        folded = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # first batch (neither dir exists) or interrupted swap (.old
-        # survives) — a present-but-unreadable dir raises, it does not
-        # silently restart the applied state from this batch
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:
-            merged = folded
-        else:
-            batch_seq = folded.select(
-                F.col(key).alias("_k"), F.col("op_seq").alias("_new_seq")
-            )
-            kept = (
-                current.join(batch_seq, current[key] == F.col("_k"), "left_outer")
-                .filter(
-                    F.col("_new_seq").isNull()
-                    | (F.col("op_seq") >= F.col("_new_seq"))
-                )
-                .drop("_k", "_new_seq")
-            )
-            cur_seq = current.select(
-                F.col(key).alias("_k"), F.col("op_seq").alias("_cur_seq")
-            )
-            landed = (
-                folded.join(cur_seq, folded[key] == F.col("_k"), "left_outer")
-                .filter(
-                    F.col("_cur_seq").isNull()
-                    | (F.col("op_seq") > F.col("_cur_seq"))
-                )
-                .drop("_k", "_cur_seq")
-            )
-            merged = kept.unionByName(landed)
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap: rename aside, rename in, THEN drop the old —
-        # a full state dir exists at every instant (see docstring)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    writer = stream_df.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint
+    max-lateness window. State protocol and crash-safe swap:
+    ``_state_sink`` / ``_swap_in``. A table format upgrades the body to
+    MERGE with snapshot isolation."""
+    return _state_sink(
+        stream_df,
+        target_path,
+        checkpoint,
+        trigger,
+        lambda df: _lww_newest(df, key),
+        lambda current, batch: _lww_apply(current, batch, key),
+        stamped=False,
     )
-    # default: drain-and-stop; pass e.g. {"processingTime": "1 second"} for
-    # a continuous cadence (latency measured in tools/streaming_latency.py)
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
 
 
 def read_cdc_target(spark: SparkSession, target_path: str) -> DataFrame:
     """Live view over a run_cdc_sink target: retained tombstones filtered
     out, bookkeeping columns dropped. Falls back to ``<target>.old`` if
-    the main dir is momentarily absent mid-swap (see run_cdc_sink)."""
-    df = _read_state(spark, target_path, target_path + ".old")
+    the main dir is momentarily absent mid-swap (see ``_swap_in``)."""
+    df = _read_state(spark, target_path)
     if df is None:
         raise FileNotFoundError(
             f"no CDC target at {target_path} (or its .old swap survivor)"
@@ -1057,13 +1012,10 @@ def compact_cdc_target(
     for the key must carry a newer seq and wins with or without them.
     Live rows are NEVER dropped regardless of age.
 
-    Same crash-safe rename-aside swap as the sink, so compaction can run
-    between (not during) sink triggers without a visibility gap. Returns
+    Writes through ``_swap_in``, so compaction can run between (not
+    during) sink triggers without a visibility gap. Returns
     {"dropped": n_tombstones_removed, "kept": rows_remaining}."""
-    import shutil
-    import uuid
-
-    current = _read_state(spark, target_path, target_path + ".old")
+    current = _read_state(spark, target_path)
     if current is None:
         raise FileNotFoundError(
             f"no CDC target at {target_path} (or its .old swap survivor)"
@@ -1072,14 +1024,7 @@ def compact_cdc_target(
         (F.col("op") != "D") | (F.col("op_seq") >= tombstone_horizon_seq)
     )
     n_before = current.count()
-    tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-    keep.write.mode("overwrite").parquet(tmp)
-    old = target_path + ".old"
-    if os.path.exists(target_path):
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(target_path, old)
-    os.replace(tmp, target_path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(keep, target_path)
     n_after = spark.read.parquet(target_path).count()
     return {"dropped": n_before - n_after, "kept": n_after}
 
@@ -1101,94 +1046,56 @@ def run_kmv_sink(
     window the stored state is ≤ k hashes (k·8 bytes), not the full id
     set, and late arrivals within the replay horizon merge idempotently
     (a replayed batch re-unions the same hashes — distinct absorbs it,
-    the exactly-once-by-idempotence shape of the merge sink family).
+    so the sink is unstamped in ``_state_sink``).
     Estimates are derived FROM the synopsis at read time with the same
     (k−1)·2^60/h_k closed form; windows with < k hashes are exact."""
     from hawaiidatapipeline_spark.operators.dedup import portable_hash64
 
     def synopsis(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         hashed = df.select(
             F.floor(F.unix_micros("ts") / 21600000000)
             .cast("long")
             .alias("w"),
             portable_hash64(F.col("user_id").cast("string"), 7).alias("h"),
         ).distinct()
-        wk = Window.partitionBy("w").orderBy("h")
-        return (
-            hashed.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") <= k)
-            .select("w", "h")
-        )
+        return _k_smallest(hashed, "w", k)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_syn = synopsis(batch_df)
-        # long-lived accumulated state: only a genuinely absent path means
-        # 'first batch' — an unreadable target raises rather than silently
-        # overwriting the synopsis with this batch alone (which would
-        # break the lossless-merge claim)
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:
-            merged_src = batch_syn
-        else:
-            merged_src = current.unionByName(batch_syn).distinct()
-        from pyspark.sql import Window
-
-        wk = Window.partitionBy("w").orderBy("h")
-        merged = (
-            merged_src.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") <= k)
-            .select("w", "h")
-        )
-        staged = merged.collect()  # tiny: <= k hashes per window
-        import shutil
-        import uuid
-
-        # staged write + rename-aside swap: a full synopsis dir exists at
-        # every instant, so an interrupted write is recoverable from .old
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(staged, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        events,
+        target_path,
+        checkpoint,
+        trigger,
+        synopsis,
+        lambda current, batch: _k_smallest(
+            current.unionByName(batch).distinct(), "w", k
+        ),
+        stamped=False,
     )
 
 
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental file source over the documents table — the corpus
-    landing zone a crawler appends into. Schema pinned from the batch
-    read; ``maxFilesPerTrigger=1`` with a 4-way split stage forces
-    multiple micro-batches out of the single-file fixture so merge
-    logic is actually exercised."""
+def _stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Incremental file source over one fixture table. Schema pinned from
+    the batch read; the table is staged as a 4-way split and read with
+    ``maxFilesPerTrigger=1``, which forces multiple micro-batches out of
+    the single-file fixture so the sinks' merge paths actually run."""
     prepare_session(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
     landing = os.path.join(
-        CACHE_DIR,
-        "landing_docs_" + sf_dir.strip("/").replace("/", "_"),
+        CACHE_DIR, f"landing_{table}_" + sf_dir.strip("/").replace("/", "_")
     )
-    import shutil
-
     shutil.rmtree(landing, ignore_errors=True)
-    batch = spark.read.parquet(src)
+    batch = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
     batch.repartition(4).write.mode("overwrite").parquet(landing)
     return (
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
+
+
+def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental file source over the documents table — the corpus
+    landing zone a crawler appends into (``_stream_table``)."""
+    return _stream_table(spark, sf_dir, "documents")
 
 
 def run_dsir_model_sink(
@@ -1208,77 +1115,36 @@ def run_dsir_model_sink(
     corpus size; λ (and document scores) are derived FROM the counters at
     read time (``dsir_model_lambda``), so the drained model scores every
     document exactly as a single batch pass would (equivalence test #33).
-    Exactly-once: the table carries the ``_last_batch`` stamp — a replayed
-    batch folds in once (counter sums are NOT idempotent under replay,
-    unlike the union/distinct sinks, so the stamp is load-bearing here
-    exactly as in run_aggregate_sink)."""
+    Exactly-once: counter sums are NOT idempotent under replay (unlike
+    the union/distinct sinks), so the sink is ``_state_sink``-stamped, as
+    run_aggregate_sink is."""
     from hawaiidatapipeline_spark.queries.selection_extra import (
         _dsir_bucket_model,
         _dsir_doc_buckets,
     )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = _dsir_bucket_model(_dsir_doc_buckets(batch_df))
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:  # first batch only; a damaged target raises
-            merged = partial
-        else:
-            if "_last_batch" in current.columns:
-                applied = current.agg(F.max("_last_batch")).collect()[0][0]
-                if applied is not None and batch_id <= applied:
-                    return  # replayed batch already folded in — skip
-                current = current.drop("_last_batch")
-            merged = (
-                current.unionByName(partial)
-                .groupBy("f")
-                .agg(F.sum("cr").alias("cr"), F.sum("ct").alias("ct"))
-            )
-        merged = merged.withColumn("_last_batch", F.lit(batch_id))
-        staged = merged.collect()  # <= B = 256 rows by construction
-        import shutil
-        import uuid
+    def add(current: DataFrame, batch: DataFrame) -> DataFrame:
+        return (
+            current.unionByName(batch)
+            .groupBy("f")
+            .agg(F.sum("cr").alias("cr"), F.sum("ct").alias("ct"))
+        )
 
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(staged, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        docs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        docs,
+        target_path,
+        checkpoint,
+        trigger,
+        lambda df: _dsir_bucket_model(_dsir_doc_buckets(df)),
+        add,
+        stamped=True,
     )
 
 
 def stream_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental file source over the orders table — the upstream a
-    CDC feed replays. Schema pinned from the batch read; 4-way split +
-    ``maxFilesPerTrigger=1`` forces multiple micro-batches out of the
-    single-file fixture (the stream_documents discipline)."""
-    prepare_session(spark)
-    src = os.path.join(sf_dir, "orders.parquet")
-    landing = os.path.join(
-        CACHE_DIR,
-        "landing_orders_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    import shutil
-
-    shutil.rmtree(landing, ignore_errors=True)
-    batch = spark.read.parquet(src)
-    batch.repartition(4).write.mode("overwrite").parquet(landing)
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    CDC feed replays (``_stream_table``)."""
+    return _stream_table(spark, sf_dir, "orders")
 
 
 def run_cdc_apply_sink(
@@ -1291,14 +1157,15 @@ def run_cdc_apply_sink(
     ``etl_cdc_apply`` (Debezium-style change-feed materialization): each
     micro-batch derives its slice of the op log (I/U/D with op_seq, the
     SAME deterministic derivation as the batch key) and folds it into
-    the keyed state table by LAST-WRITER-WINS on (key, op_seq desc) —
-    one row per key survives each merge, so state is bounded by live
-    keys, never by ops applied. TOMBSTONES STAY IN STATE (a delete row
+    the keyed state table by LAST-WRITER-WINS on op_seq — the same
+    ``_lww_newest`` / ``_lww_apply`` fold as run_cdc_sink — so one row
+    per key survives each merge, and state is bounded by live keys,
+    never by ops applied. TOMBSTONES STAY IN STATE (a delete row
     is kept, not dropped): dropping them would let a late/replayed
     lower-seq op resurrect a deleted key; the read view
     (``cdc_live_view``) filters them. Exactly-once: LWW on op_seq makes
     re-applying the same ops a no-op by construction, and the
-    ``_last_batch`` stamp short-circuits whole-batch replays. The
+    ``_state_sink`` stamp short-circuits whole-batch replays. The
     drained state equals the one-pass batch fold (equivalence test
     #35). At 100 TB: state merge is one shuffle on the key per batch —
     the MERGE-free CDC shape of the batch twin, incrementalized."""
@@ -1327,45 +1194,14 @@ def run_cdc_apply_sink(
         )
         return inserts.unionByName(updates).unionByName(deletes)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch_df.sparkSession
-        partial = ops_of(batch_df)
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:
-            merged_src = partial
-        else:
-            if "_last_batch" in current.columns:
-                applied = current.agg(F.max("_last_batch")).collect()[0][0]
-                if applied is not None and batch_id <= applied:
-                    return  # replayed batch already folded in — skip
-                current = current.drop("_last_batch")
-            merged_src = current.unionByName(partial)
-        w = Window.partitionBy("key").orderBy(F.col("op_seq").desc())
-        merged = (
-            merged_src.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-            .withColumn("_last_batch", F.lit(batch_id))
-        )
-        import shutil
-        import uuid
-
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        orders.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        orders,
+        target_path,
+        checkpoint,
+        trigger,
+        lambda df: _lww_newest(ops_of(df), "key"),
+        lambda current, batch: _lww_apply(current, batch, "key"),
+        stamped=True,
     )
 
 
@@ -1403,20 +1239,17 @@ def run_classifier_model_sink(
     bit-identical weights/curve as the batch twin (equivalence test #34).
 
     Storage layout: feature rows (doc_id, f in [0, B), c = count) and one
-    label row per doc (f = -2, c = y, source set). Exactly-once: the
-    ``_last_batch`` stamp skips replayed batch ids (per-doc rows would
-    duplicate under replay — the stamp is load-bearing, as in
-    run_aggregate_sink). State is written with a distributed parquet
-    write (never collected); the rename-aside rewrite keeps a readable
-    store at every instant. At 100 TB the rewrite-per-batch becomes
-    append-a-partition-per-batch with the same stamp discipline — noted
-    in SCALE.md; the fixture exercises the merge path."""
+    label row per doc (f = -2, c = y, source set). Exactly-once: per-doc
+    rows would duplicate under replay, so the sink is
+    ``_state_sink``-stamped, as run_aggregate_sink is. At 100 TB the
+    rewrite-per-batch becomes append-a-partition-per-batch with the same
+    stamp discipline — noted in SCALE.md; the fixture exercises the
+    merge path."""
     from hawaiidatapipeline_spark.queries.round12_extra import _qc_featurize
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        docf, lab = _qc_featurize(batch_df)
-        partial = docf.select(
+    def features(df: DataFrame) -> DataFrame:
+        docf, lab = _qc_featurize(df)
+        return docf.select(
             "doc_id",
             "f",
             "c",
@@ -1429,34 +1262,15 @@ def run_classifier_model_sink(
                 "source",
             )
         )
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:  # first batch only; a damaged target raises
-            merged = partial
-        else:
-            if "_last_batch" in current.columns:
-                applied = current.agg(F.max("_last_batch")).collect()[0][0]
-                if applied is not None and batch_id <= applied:
-                    return  # replayed batch already folded in — skip
-                current = current.drop("_last_batch")
-            merged = current.unionByName(partial)
-        merged = merged.withColumn("_last_batch", F.lit(batch_id))
-        import shutil
-        import uuid
 
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        docs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        docs,
+        target_path,
+        checkpoint,
+        trigger,
+        features,
+        lambda current, batch: current.unionByName(batch),
+        stamped=True,
     )
 
 
@@ -1493,8 +1307,6 @@ def kmv_estimates(synopsis: DataFrame, k: int = 32) -> DataFrame:
     """Read-time estimator over a stored KMV synopsis table (w, h):
     per window, (k−1)·2^60/h_k when the synopsis is full, exact count
     of hashes otherwise — identical arithmetic to the batch twin."""
-    from pyspark.sql import Window
-
     wk = Window.partitionBy("w").orderBy("h")
     wa = Window.partitionBy("w")
     ranked = synopsis.select(
@@ -1533,7 +1345,7 @@ def run_theta_sink(
     derived set-operation estimates match the checked batch twin row
     for row (equivalence test #36). State: ≤ k hashes per audience at
     any stream length; replayed batches re-union the same hashes
-    (idempotent, the merge-sink family's exactly-once shape). Set
+    (idempotent, so the sink is unstamped in ``_state_sink``). Set
     algebra (union/intersection/a-not-b under a common theta) is
     derived FROM the synopses at read time by :func:`theta_setops` —
     the streaming answer to 'how big is the audience overlap' without
@@ -1541,8 +1353,6 @@ def run_theta_sink(
     from hawaiidatapipeline_spark.operators.dedup import portable_hash64
 
     def synopsis(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         h = portable_hash64(F.col("o_custkey").cast("string"), 11)
         tagged = (
             df.select(
@@ -1559,49 +1369,18 @@ def run_theta_sink(
             )
             .distinct()
         )
-        wk = Window.partitionBy("tag").orderBy("h")
-        return (
-            tagged.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") <= k)
-            .select("tag", "h")
-        )
+        return _k_smallest(tagged, "tag", k)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_syn = synopsis(batch_df)
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is None:
-            merged_src = batch_syn
-        else:
-            merged_src = current.unionByName(batch_syn).distinct()
-        from pyspark.sql import Window
-
-        wk = Window.partitionBy("tag").orderBy("h")
-        merged = (
-            merged_src.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") <= k)
-            .select("tag", "h")
-        )
-        staged = merged.collect()  # tiny: <= k hashes per audience
-        import shutil
-        import uuid
-
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(staged, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        orders.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        orders,
+        target_path,
+        checkpoint,
+        trigger,
+        synopsis,
+        lambda current, batch: _k_smallest(
+            current.unionByName(batch).distinct(), "tag", k
+        ),
+        stamped=False,
     )
 
 
@@ -1612,8 +1391,6 @@ def theta_setops(synopsis: DataFrame, k: int = 64) -> DataFrame:
     union/intersection/a-not-b counts scaled by 2^60/theta — identical
     arithmetic to the batch twin `agg_theta_sketch_setops` (minus its
     exact-cardinality audit leg, which needs the raw stream)."""
-    from pyspark.sql import Window
-
     H = 1152921504606846976
     wk = Window.partitionBy("tag").orderBy("h")
     wa = Window.partitionBy("tag")
@@ -1679,13 +1456,12 @@ def run_decay_sink(
     2^(−age/h) weights depend only on (day, T), so decayed sums are a
     deterministic function of this state — no weight is baked in at
     write time, the policy lives at read time like the VAD/scene-cut
-    thresholds). Replay safety: a replayed batch is pre-aggregated and
-    summed once per batch id via the `_last_batch` stamp. State is
-    bounded by types × days-of-history, never event count."""
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_counts = (
-            batch_df.select(
+    thresholds). Replay safety: counts are summed, so the sink is
+    ``_state_sink``-stamped and a replayed batch id is summed once. State
+    is bounded by types × days-of-history, never event count."""
+    def day_counts(df: DataFrame) -> DataFrame:
+        return (
+            df.select(
                 "event_type",
                 F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
                 .cast("long")
@@ -1693,42 +1469,17 @@ def run_decay_sink(
             )
             .groupBy("event_type", "day")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .withColumn("_last_batch", F.lit(batch_id).cast("long"))
         )
-        current = _read_state(spark, target_path, target_path + ".old")
-        if current is not None:
-            done = current.agg(
-                F.max("_last_batch").alias("m")
-            ).collect()[0]["m"]
-            if done is not None and batch_id <= done:
-                return  # replayed batch already folded
-            merged_src = current.unionByName(batch_counts)
-        else:
-            merged_src = batch_counts
-        merged = merged_src.groupBy("event_type", "day").agg(
-            F.sum("n").cast("long").alias("n"),
-            F.max("_last_batch").cast("long").alias("_last_batch"),
+
+    def add(current: DataFrame, batch: DataFrame) -> DataFrame:
+        return (
+            current.unionByName(batch)
+            .groupBy("event_type", "day")
+            .agg(F.sum("n").cast("long").alias("n"))
         )
-        staged = merged.collect()  # bounded: types x days-of-history
-        import shutil
-        import uuid
 
-        tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(staged, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        old = target_path + ".old"
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(target_path, old)
-        os.replace(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _state_sink(
+        events, target_path, checkpoint, trigger, day_counts, add, stamped=True
     )
 
 

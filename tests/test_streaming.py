@@ -987,35 +987,80 @@ def test_kmv_sink_damaged_target_raises_not_resets(spark, tmp_path):
         assert f.read() == b"not a parquet file"
 
 
-def test_merge_sink_recovers_from_old_after_interrupted_swap(spark, tmp_path):
-    """run_merge_sink's rename-aside swap: if a crash leaves only
-    <target>.old (between rename-aside and rename-in), the next batch
-    reads the survivor instead of restarting state."""
-    import os
-    import shutil
+# one sink per fold family: (sink, source table, key to split it on,
+# read-time view of the drained target)
+_SWAP_FAMILIES = {
+    "merge": (
+        lambda df, t, c: runtime.run_merge_sink(df, t, key="event_id", checkpoint=c),
+        "events",
+        "event_id",
+        lambda spark, t: _rows(
+            spark.read.parquet(t),
+            ["event_id", "ts", "user_id", "event_type", "value"],
+        ),
+    ),
+    "kmv": (
+        lambda df, t, c: runtime.run_kmv_sink(df, t, c, k=32),
+        "events",
+        "event_id",
+        lambda spark, t: _rows(
+            runtime.kmv_estimates(spark.read.parquet(t), k=32),
+            ["window_id", "est_distinct"],
+        ),
+    ),
+    "decay": (
+        runtime.run_decay_sink,
+        "events",
+        "event_id",
+        lambda spark, t: _rows(
+            runtime.decay_estimates(spark.read.parquet(t)),
+            ["event_type", "n_events", "decayed_h7_micro"],
+        ),
+    ),
+    "cdc_apply": (
+        runtime.run_cdc_apply_sink,
+        "orders",
+        "o_orderkey",
+        lambda spark, t: _rows(
+            runtime.cdc_live_view(spark.read.parquet(t)),
+            ["key", "op_seq", "op", "price"],
+        ),
+    ),
+}
 
-    target = str(tmp_path / "merge_target")
-    q = runtime.run_merge_sink(
-        runtime.stream_events(spark, SF0001),
-        target,
-        key="event_id",
-        checkpoint=str(tmp_path / "merge_ckpt1"),
-    )
-    q.awaitTermination()
-    n_first = spark.read.parquet(target).count()
-    assert n_first > 0
-    # simulate the crash window: target renamed aside, new dir never landed
-    shutil.rmtree(target + ".old", ignore_errors=True)
-    os.replace(target, target + ".old")
-    q2 = runtime.run_merge_sink(
-        runtime.stream_events(spark, SF0001),
-        target,
-        key="event_id",
-        checkpoint=str(tmp_path / "merge_ckpt2"),
-    )
-    q2.awaitTermination()
-    # merged against the survivor: same keys -> same final row count
-    assert spark.read.parquet(target).count() == n_first
+
+@pytest.mark.parametrize("sink", list(_SWAP_FAMILIES))
+def test_sink_recovers_from_old_after_interrupted_swap(spark, tmp_path, sink):
+    """The shared rename-aside swap (runtime._swap_in), one sink per fold
+    family: if a crash leaves only <target>.old (between rename-aside and
+    rename-in), the next batch reads the survivor instead of restarting
+    state — the resumed stream ends at the same state as an
+    uninterrupted run over the same two batches."""
+    import os
+
+    run, table, key, view = _SWAP_FAMILIES[sink]
+    src = load_table(spark, SF0001, table)
+    halves = [src.filter(F.col(key) % 2 == i) for i in (0, 1)]
+
+    def drain(name, crash):
+        base = tmp_path / name
+        target = str(base / "target")
+        for i, half in enumerate(halves):
+            half.coalesce(1).write.parquet(str(base / "landing" / f"p{i}"))
+            stream = (
+                spark.readStream.schema(src.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(str(base / "landing" / "p*"))
+            )
+            # same checkpoint: the second start runs only the new batch
+            run(stream, target, str(base / "ckpt")).awaitTermination()
+            if crash and i == 0:
+                # crash window: target renamed aside, new dir never landed
+                os.replace(target, target + ".old")
+        assert not os.path.exists(target + ".old")  # swap completed cleanly
+        return view(spark, target)
+
+    assert drain("crashed", crash=True) == drain("clean", crash=False)
 
 
 def test_late_audit_sink_equals_batch_twin(spark, tmp_path):
@@ -1098,35 +1143,70 @@ def test_late_audit_sink_equals_batch_twin(spark, tmp_path):
     assert _rows(got, cols) == _rows(want, cols)
 
 
-def test_aggregate_sink_replay_is_idempotent(spark, tmp_path):
-    """ADVICE r10: a replayed micro-batch (same or older batch_id) must NOT
-    double-merge into the running aggregate. Re-running the whole stream
-    against the same target with a fresh checkpoint replays every batch
-    from id 0 — with the _last_batch stamp the totals must be unchanged."""
-    target = str(tmp_path / "agg_target")
-    q = runtime.run_aggregate_sink(
-        runtime.stream_events(spark, SF0001),
-        target,
-        str(tmp_path / "ckpt1"),
-        key="event_type",
-    )
-    q.awaitTermination()
-    first = {
-        r["event_type"]: (r["n"], float(r["total"]))
-        for r in spark.read.parquet(target).collect()
-    }
-    q2 = runtime.run_aggregate_sink(
-        runtime.stream_events(spark, SF0001),
-        target,
-        str(tmp_path / "ckpt2"),  # fresh WAL -> full replay
-        key="event_type",
-    )
-    q2.awaitTermination()
-    second = {
-        r["event_type"]: (r["n"], float(r["total"]))
-        for r in spark.read.parquet(target).collect()
-    }
-    assert second == first
+# stamped sinks: (start the sink on its fixture stream, read-time view)
+_STAMPED_SINKS = {
+    "aggregate": (
+        lambda spark, t, c: runtime.run_aggregate_sink(
+            runtime.stream_events(spark, SF0001), t, c, key="event_type"
+        ),
+        lambda spark, t: {
+            r["event_type"]: (r["n"], float(r["total"]))
+            for r in spark.read.parquet(t).collect()
+        },
+    ),
+    "dsir": (
+        lambda spark, t, c: runtime.run_dsir_model_sink(
+            runtime.stream_documents(spark, SF0001), t, c
+        ),
+        lambda spark, t: _rows(
+            runtime.dsir_model_lambda(spark.read.parquet(t)), ["f", "lam_micro"]
+        ),
+    ),
+    "cdc_apply": (
+        lambda spark, t, c: runtime.run_cdc_apply_sink(
+            runtime.stream_orders(spark, SF0001), t, c
+        ),
+        lambda spark, t: _rows(
+            runtime.cdc_live_view(spark.read.parquet(t)),
+            ["key", "op_seq", "op", "price"],
+        ),
+    ),
+    "classifier": (
+        lambda spark, t, c: runtime.run_classifier_model_sink(
+            runtime.stream_documents(spark, SF0001), t, c
+        ),
+        lambda spark, t: _rows(
+            runtime.classifier_training_curve(spark.read.parquet(t)),
+            ["round", "n_correct", "n_docs", "accuracy_micro"],
+        ),
+    ),
+    "decay": (
+        lambda spark, t, c: runtime.run_decay_sink(
+            runtime.stream_events(spark, SF0001), t, c
+        ),
+        lambda spark, t: _rows(
+            runtime.decay_estimates(spark.read.parquet(t)),
+            ["event_type", "n_events", "decayed_h7_micro", "decayed_h30_micro"],
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", list(_STAMPED_SINKS))
+def test_stamped_sink_replay_is_idempotent(spark, tmp_path, sink):
+    """ADVICE r10, for every _last_batch-stamped sink: a replayed
+    micro-batch (same or older batch_id) must NOT double-merge into the
+    stored state. Re-running the whole stream against the same target
+    with a fresh checkpoint replays every batch from id 0 — with the
+    stamp the read-time view must be unchanged."""
+    run, view = _STAMPED_SINKS[sink]
+    target = str(tmp_path / "target")
+    run(spark, target, str(tmp_path / "ckpt1")).awaitTermination()
+    first = view(spark, target)
+    assert dict(spark.read.parquet(target).dtypes)["_last_batch"] == "bigint"
+    # fresh WAL -> full replay
+    run(spark, target, str(tmp_path / "ckpt2")).awaitTermination()
+    assert view(spark, target) == first
 
 
 def test_dsir_model_sink_equals_batch_twin(spark, tmp_path):
@@ -1299,3 +1379,94 @@ def test_decay_sink_estimates_equal_batch_twin(spark, tmp_path):
     n_state = state.count()
     n_events = spark.read.parquet(SF0001 + "/events.parquet").count()
     assert n_state < n_events / 2
+
+
+def test_lww_fold_keeps_current_row_on_op_seq_tie(spark):
+    """The one last-writer-wins CDC fold (run_cdc_sink and
+    run_cdc_apply_sink): the batch folds to its newest op per key, a
+    strictly newer batch op replaces the stored row, an older one loses,
+    and on an op_seq TIE the stored (current) row stays."""
+    schema = "key long, op string, op_seq long, price double"
+    current = spark.createDataFrame(
+        [(1, "I", 5, 10.0), (2, "I", 5, 20.0), (3, "U", 9, 30.0)], schema
+    )
+    batch = spark.createDataFrame(
+        [
+            (1, "U", 5, 11.0),  # tie with the stored row -> stored row stays
+            (2, "U", 4, 19.0),  # older than the batch's own newest op
+            (2, "U", 6, 21.0),  # strictly newer -> replaces the stored row
+            (3, "I", 1, 31.0),  # older than the stored row -> loses
+            (4, "I", 1, 40.0),  # new key -> lands
+        ],
+        schema,
+    )
+    got = runtime._lww_apply(current, runtime._lww_newest(batch, "key"), "key")
+    assert _rows(got, ["key", "op", "op_seq", "price"]) == [
+        (1, "I", 5, 10.0),
+        (2, "U", 6, 21.0),
+        (3, "U", 9, 30.0),
+        (4, "I", 1, 40.0),
+    ]
+
+
+def test_state_protocol_is_single_sourced():
+    """Lint over streaming/runtime.py: the crash-safe state protocol is
+    written once. Renames (``os.replace``) and the ``__tmp_`` staging name
+    live only in ``_swap_in``; the ``.old`` suffix only there and in the
+    ``_read_state`` fallback, so no other function can rename state or
+    drop a ``.old`` survivor; the writer chain (``foreachBatch``) only in
+    ``_start``. No state sink rebuilds its state on the driver
+    (``createDataFrame``), and the replay guard's one scalar read is the
+    only ``collect`` in the sink layer."""
+    import ast
+
+    with open(runtime.__file__) as f:
+        tree = ast.parse(f.read())
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def attr_calls(fn, attr, owner=None):
+        return [
+            n
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+            and (owner is None or getattr(n.func.value, "id", None) == owner)
+        ]
+
+    def holding(pred):
+        return sorted(
+            name
+            for name, fn in funcs.items()
+            if any(
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and pred(n.value)
+                for n in ast.walk(fn)
+            )
+        )
+
+    def calling(attr, owner=None):
+        return sorted(name for name, fn in funcs.items() if attr_calls(fn, attr, owner))
+
+    assert calling("replace", owner="os") == ["_swap_in"]
+    assert holding(lambda v: "__tmp_" in v) == ["_swap_in"]
+    assert holding(lambda v: v == ".old") == ["_read_state", "_swap_in"]
+    assert calling("foreachBatch") == ["_start"]
+    assert calling("createDataFrame") == []
+    protocol = ("_read_state", "_swap_in", "_start", "_state_sink", "compact_cdc_target")
+    sink_layer = [
+        name
+        for name in funcs
+        if (name.startswith("run_") and name.endswith("_sink")) or name in protocol
+    ]
+    collects = {name: len(attr_calls(funcs[name], "collect")) for name in sink_layer}
+    assert {n: c for n, c in collects.items() if c} == {"_state_sink": 1}
+    # every state read goes through the single-path reader
+    reads = [
+        n
+        for fn in funcs.values()
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_read_state"
+    ]
+    assert reads and all(len(n.args) == 2 for n in reads)

@@ -1,15 +1,20 @@
 """Streaming latency/throughput evidence for the stateful runtime.
 
 The streaming operators have batch-parity correctness tests but (until
-round 5) no performance artifact. This probe drives the two custom
-stateful sinks with the rate source at two input rates and harvests
+round 5) no performance artifact. This probe drives ten stateful
+operators with the rate source at two input rates and harvests
 per-microbatch numbers from the progress reports:
 
-- **rate limiter** (``rate_limited_counters``): applyInPandasWithState,
-  per-user hour buckets — measures the Arrow state-exchange path;
-- **CDC applier** (``run_cdc_sink``): foreachBatch merge + atomic swap —
-  measures a full fold-merge-rewrite cycle per batch over a bounded
-  (1000-key) target, the steady-state cost profile of the applier.
+- two ``applyInPandasWithState`` operators, ``rate_limited_counters``
+  (per-user hour buckets) and ``funnel_stage_tracker`` (per-user funnel
+  state machine) — the Arrow state-exchange path;
+- eight foreachBatch state sinks — ``run_cdc_sink``,
+  ``run_aggregate_sink``, ``run_late_audit_sink``, ``run_kmv_sink``,
+  ``run_dsir_model_sink``, ``run_classifier_model_sink``,
+  ``run_theta_sink`` and ``run_decay_sink`` — each a full
+  read-merge-swap cycle per batch over its bounded state (e.g. the CDC
+  applier's 1000-key target), the steady-state cost profile of the
+  shared state protocol (``_state_sink`` / ``_swap_in``).
 
 For each (operator, rate): batches, p50/p95 trigger-execution latency,
 input and processed rows/s (medians, warmup batches dropped). Appends a
@@ -39,6 +44,13 @@ TRIGGER = {"processingTime": "1 second"}
 WARMUP_BATCHES = 3
 
 
+def _scratch_dir():
+    """Per-lane temp dir. A stopped query's cancelled tasks can still be
+    writing state files when the lane exits, so a failed cleanup must not
+    abort the remaining lanes."""
+    return tempfile.TemporaryDirectory(ignore_cleanup_errors=True)
+
+
 def _progress_stats(query) -> dict | None:
     """p50/p95 triggerExecution + throughput medians from recentProgress."""
     progs = []
@@ -65,7 +77,7 @@ def _progress_stats(query) -> dict | None:
 def measure_rate_limiter(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import rate_limited_counters
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
@@ -94,7 +106,7 @@ def measure_rate_limiter(spark, rate: int) -> dict | None:
 def measure_cdc_applier(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_cdc_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
@@ -119,7 +131,7 @@ def measure_cdc_applier(spark, rate: int) -> dict | None:
 def measure_aggregate_sink(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_aggregate_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
@@ -144,7 +156,7 @@ def measure_aggregate_sink(spark, rate: int) -> dict | None:
 def measure_funnel_tracker(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import funnel_stage_tracker
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
@@ -183,7 +195,7 @@ def measure_funnel_tracker(spark, rate: int) -> dict | None:
 def measure_late_audit_sink(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_late_audit_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         # ~1/7 of rows arrive with a 20-140 min-old event time so every
         # batch routes through all three verdicts; event_id = value is the
         # arrival order the classifier windows on
@@ -222,7 +234,7 @@ def measure_late_audit_sink(spark, rate: int) -> dict | None:
 def measure_kmv_sink(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_kmv_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
@@ -274,7 +286,7 @@ def _doc_stream(spark, rate: int):
 def measure_dsir_model_sink(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_dsir_model_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         q = run_dsir_model_sink(
             _doc_stream(spark, rate), f"{tmp}/target", f"{tmp}/ckpt",
             trigger=TRIGGER,
@@ -293,7 +305,7 @@ def measure_classifier_model_sink(spark, rate: int) -> dict | None:
         run_classifier_model_sink,
     )
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         q = run_classifier_model_sink(
             _doc_stream(spark, rate), f"{tmp}/target", f"{tmp}/ckpt",
             trigger=TRIGGER,
@@ -308,7 +320,7 @@ def measure_classifier_model_sink(spark, rate: int) -> dict | None:
 def measure_theta_sink(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_theta_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
@@ -338,7 +350,7 @@ def measure_theta_sink(spark, rate: int) -> dict | None:
 def measure_decay_sink(spark, rate: int) -> dict | None:
     from hawaiidatapipeline_spark.streaming.runtime import run_decay_sink
 
-    with tempfile.TemporaryDirectory() as tmp:
+    with _scratch_dir() as tmp:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rate)
